@@ -19,7 +19,7 @@ Layout:
                 windows, multimodal)
     plans       named query registry + DuckDB oracle SQL (correctness gate)
     streaming   Structured Streaming wrap: sources, foreachBatch sinks,
-                metrics listener
+                per-batch metrics
 """
 
 __version__ = "0.1.0"

@@ -18,14 +18,17 @@ Design notes
 ------------
 The reference gates **once per batch** on the first record's stream
 (Handler.java:63); a Lambda event-source mapping only ever carries one
-stream, so per-batch == per-stream.  We gate per-row via a broadcast
-join — strictly more general, identical result on single-stream input,
-and it handles empty batches (the reference NPEs on those).
+stream, so per-batch == per-stream.  We gate per-row — strictly more
+general, identical result on single-stream input, and it handles empty
+batches (the reference NPEs on those).
 
 Gate semantics (Handler.java:139-167): no config row → drop + warn;
 multiple config rows → drop (error); case-insensitive region compare.
-``prepare_config`` collapses the multi-row case *before* the join so the
-gate join itself stays a clean 1:N broadcast equi-join.
+The config is control-plane metadata (one row per stream), so
+``active_streams`` collects it on the driver and applies these rules in
+Python, the way the reference applies them to its one DynamoDB Query
+result (Handler.java:65).  The gate is then a plain ``isin`` filter on
+the data side: no join, no config-side job.
 
 Checkpoint: the reference putItems per record, so the surviving value is
 the LAST in sequence order per stream.  Commit timestamps are monotone
@@ -33,15 +36,18 @@ per stream (CDC premise, README.md:9) and ISO-8601 strings compare
 lexicographically, so ``max(commitTimestamp)`` is the faithful —
 and order-independent, hence distributable — translation (SURVEY §7d).
 
-Scale notes (100 TB): the config side is KB-sized → always broadcast (no
-shuffle on the stream side).  The only shuffle in the whole pipeline is
-the per-stream checkpoint aggregation, whose key cardinality equals the
-stream count (tiny); partial aggregation map-side reduces it to one row
-per (task, stream) before the exchange.  Everything else is narrow and
-whole-stage-codegen'd.
+Scale notes (100 TB): the config is KB-sized and collected on the
+driver; a ``VALUES`` config collects without a Spark job.  The gate is a
+narrow filter on the stream side (no shuffle, no broadcast).  The only
+shuffle in the whole pipeline is the per-stream checkpoint aggregation,
+whose key cardinality equals the stream count (tiny); partial
+aggregation map-side reduces it to one row per (task, stream) before the
+exchange.  Everything else is narrow and whole-stage-codegen'd.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -59,30 +65,34 @@ def with_decoded(envelope: DataFrame) -> DataFrame:
     ).withColumn("commitTimestamp", extract_commit_timestamp(F.col("payload")))
 
 
-def prepare_config(config: DataFrame) -> DataFrame:
-    """Collapse the config table to streams with EXACTLY one config row
-    (>1 row → dropped with error in the reference, Handler.java:156-159)."""
-    return (
-        config.groupBy("streamName")
-        .agg(F.count(F.lit(1)).alias("n_cfg"), F.min("activeRegion").alias("activeRegion"))
-        .where(F.col("n_cfg") == 1)
-        .drop("n_cfg")
+def active_streams(config: DataFrame, current_region: str) -> list[str]:
+    """Op 5 rule: the streams replicated from ``current_region``.
+
+    A stream needs EXACTLY one config row (none → dropped with a warning,
+    more than one → dropped with an error; Handler.java:152-159), and
+    that row's region must equal ``current_region`` ignoring case
+    (Handler.java:160-161, equalsIgnoreCase).  A NULL stream name or
+    region never matches.
+    """
+    rows = config.select("streamName", "activeRegion").collect()
+    n_rows = Counter(r["streamName"] for r in rows)
+    region = current_region.lower()
+    return sorted(
+        r["streamName"]
+        for r in rows
+        if r["streamName"] is not None
+        and n_rows[r["streamName"]] == 1
+        and r["activeRegion"] is not None
+        and r["activeRegion"].lower() == region
     )
 
 
 def gate_active_region(
     decoded: DataFrame, config: DataFrame, current_region: str
 ) -> DataFrame:
-    """Op 5: stream-static broadcast semi-join + case-insensitive filter.
-
-    Inner join ⇒ missing-config streams drop (Handler.java:152-154);
-    filter ⇒ inactive regions drop (Handler.java:160-161, equalsIgnoreCase).
-    """
-    cfg = prepare_config(config)
-    return (
-        decoded.join(F.broadcast(cfg), "streamName", "inner")
-        .where(F.lower(F.col("activeRegion")) == F.lit(current_region.lower()))
-        .drop("activeRegion")
+    """Op 5: keep the rows of the streams active in ``current_region``."""
+    return decoded.where(
+        F.col("streamName").isin(active_streams(config, current_region))
     )
 
 

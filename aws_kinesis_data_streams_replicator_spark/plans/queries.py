@@ -196,7 +196,7 @@ def kr_payload_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SELECT streamName, count(*) AS n_replicated FROM gated GROUP BY streamName",
 )
 def kr_active_region_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Op 5 (Handler.java:139-167): broadcast stream-static gate; exercises
+    """Op 5 (Handler.java:139-167): driver-resolved IN-filter gate; exercises
     active / mixed-case / inactive / duplicate-config / missing-config."""
     return _gated(spark, sf_dir).groupBy("streamName").agg(
         F.count(F.lit(1)).alias("n_replicated")

@@ -1,23 +1,30 @@
 """The streaming replication job: the reference's hot path (SURVEY §3.1)
 as one incremental DataFrame graph.
 
-    envelope stream → decode (ops 2-4) → broadcast gate (op 5)
-      → observe(metrics)                      [op 10]
+    envelope stream → decode (ops 2-4)
       → foreachBatch:
+            active-region gate, resolved on   [op 5]
+              the driver from the config
+            observe(checkpoint + metrics)     [ops 8, 10]
             sort within partitions by seq     [op 6]
             append to replication sink        [op 7]
             per-stream max(commitTs) upsert   [op 8]
+            log batch + per-stream metrics    [op 10]
       checkpointLocation WAL                  [op 9 — retry/resume]
 
-Stream-static join note: the static config side is re-read every
-micro-batch by Structured Streaming — exactly matching the reference's
-one DynamoDB Query per batch (Handler.java:65).
+Config note: the config is re-read at the start of every micro-batch,
+exactly matching the reference's one DynamoDB Query per batch
+(Handler.java:65), so a flipped ``activeRegion`` takes effect on the
+next batch without restarting the query.
 """
 
 from __future__ import annotations
 
+import logging
+import time
+
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import replication
@@ -25,9 +32,10 @@ from .sinks import (  # noqa: F401
     append_replicated,
     read_checkpoint_table,
     replicated_exactly_once,
-    upsert_checkpoint,
     upsert_checkpoint_rows,
 )
+
+log = logging.getLogger("akr.replication")
 
 
 def run_replication_stream(
@@ -45,107 +53,105 @@ def run_replication_stream(
     because the file target can overwrite; the default append mode
     mirrors the reference's at-least-once Kinesis PutRecord contract.
 
-    Per-trigger cost (the hot path at any scale): ONE Spark job.  The
-    per-stream checkpoint maxes ride the replication write itself as
-    ``Observation`` conditional aggregates — one ``max(CASE WHEN
-    streamName = s THEN commitTimestamp END)`` per configured stream
-    (the stream set is control-plane metadata, collected once at stream
-    start) — so the old shape's ``persist`` + second aggregate job per
-    micro-batch is gone.  A stream that appears in a refreshed config
-    AFTER start is caught by an unknown-row counter in the same pass
-    and falls back to the exact per-batch aggregation (rare path,
-    semantics unchanged)."""
-    from pyspark.sql import Observation
+    Per-trigger cost (the hot path at any scale): ONE Spark job, the
+    replication write.  Each micro-batch resolves the active streams on
+    the driver (``replication.active_streams``: a ``VALUES`` config
+    collects without a job; a file-backed one costs one scan) and gates
+    with a plain filter.  Everything else the batch needs rides that
+    write as ``Observation`` aggregates over the un-gated batch: the
+    batch size, and per active stream the replicated count, the last
+    arrival and the ``max(commitTimestamp)`` checkpoint mark.
 
-    gated = replication.gate_active_region(
-        replication.with_decoded(envelope_stream), config, current_region
-    )
-    observed = gated.observe(
-        "replication_metrics",
-        F.count(F.lit(1)).alias("n_records"),
-        F.max("approximateArrivalTimestamp").alias("last_arrival"),
-    )
-    # one bounded control-plane collect at stream START (not per trigger):
-    # the configured stream names, in stable order for the agg aliases
-    known_streams = sorted(
-        r["streamName"]
-        for r in replication.prepare_config(config)
-        .select("streamName")
-        .collect()
-    )
+    Each batch logs the reference's summary line on ``akr.replication``
+    (``Total Batch Size: N, Successfully Processed: M``, README.md:136-137;
+    N before the gate, M written to the replication sink) and, per
+    replicated stream, ``ThroughPut`` and ``ReplicationLagSeconds``
+    (Handler.java:94-122)."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        streams = replication.active_streams(config, current_region)
         two_writes = dead_letter_dir is not None
         if two_writes:
             # dead-letter mode consumes the batch twice (bad + good
             # writes) — the persist still pays for itself there
             batch_df = batch_df.persist()
         try:
-            good = batch_df.where(F.col("commitTimestamp").isNotNull())
+            active = F.col("streamName").isin(streams)
+            well_formed = F.lit(True)
             if two_writes:
                 # Malformed payloads: the reference aborts the batch and
                 # retries forever (Handler.java:90-93); a poison message
                 # would wedge the stream, so the engine dead-letters it
                 # instead (documented deviation — at-least-once is kept
                 # for well-formed records either way).
-                bad = batch_df.where(F.col("commitTimestamp").isNull())
-                bad.write.mode("append").parquet(dead_letter_dir)
-                repl = good
-            else:
-                # max() ignores the NULL commitTimestamps of malformed
-                # rows, so observing the un-split batch equals
-                # checkpoint(good) exactly
-                repl = batch_df
+                batch_df.where(
+                    active & F.col("commitTimestamp").isNull()
+                ).write.mode("append").parquet(dead_letter_dir)
+                well_formed = F.col("commitTimestamp").isNotNull()
+            aggs = [F.count(F.lit(1)).alias("n_in")]
+            for i, s in enumerate(streams):
+                mine = (F.col("streamName") == s) & well_formed
+                aggs += [
+                    F.count(F.when(mine, 1)).alias(f"n_{i}"),
+                    F.max(
+                        F.when(
+                            mine,
+                            F.col("approximateArrivalTimestamp").cast("double"),
+                        )
+                    ).alias(f"arrival_{i}"),
+                    F.max(F.when(mine, F.col("commitTimestamp"))).alias(
+                        f"cts_{i}"
+                    ),
+                ]
             obs = Observation()
-            aggs = [
-                F.max(
-                    F.when(F.col("streamName") == s, F.col("commitTimestamp"))
-                ).alias(f"cts_{i}")
-                for i, s in enumerate(known_streams)
-            ]
-            unknown = (
-                ~F.col("streamName").isin(known_streams)
-                if known_streams
-                else F.lit(True)
+            out = replication.replicated_records(
+                batch_df.observe(obs, *aggs).where(active & well_formed)
             )
-            aggs.append(F.sum(unknown.cast("int")).alias("n_unknown"))
-            out = replication.replicated_records(repl.observe(obs, *aggs))
             if exactly_once:
                 replicated_exactly_once(out, replicated_dir, batch_id)
             else:
                 append_replicated(out, replicated_dir)
-            got = obs.get  # blocks-free: the write action above finished
-            incoming = {
-                s: got[f"cts_{i}"]
-                for i, s in enumerate(known_streams)
-                if got[f"cts_{i}"] is not None
-            }
-            if got["n_unknown"]:
-                # config refreshed mid-run admitted a stream unseen at
-                # start: exact fallback aggregation for just those rows
-                extra = good
-                if known_streams:
-                    extra = good.where(
-                        ~F.col("streamName").isin(known_streams)
-                    )
-                for r in replication.checkpoint(extra).collect():
-                    t = r["lastReplicatedCommitTimestamp"]
-                    s = r["streamName"]
-                    if t is not None and (
-                        s not in incoming or t > incoming[s]
-                    ):
-                        incoming[s] = t
-            upsert_checkpoint_rows(incoming, checkpoint_table_dir)
+            got = obs.get  # no wait: the write action above finished
+            upsert_checkpoint_rows(
+                {
+                    s: got[f"cts_{i}"]
+                    for i, s in enumerate(streams)
+                    if got[f"cts_{i}"] is not None
+                },
+                checkpoint_table_dir,
+            )
+            _log_batch_metrics(got, streams)
         finally:
             if two_writes:
                 batch_df.unpersist()
 
     return (
-        observed.writeStream.foreachBatch(process_batch)
+        replication.with_decoded(envelope_stream)
+        .writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", stream_checkpoint_dir)
         .outputMode("update")
         .start()
     )
+
+
+def _log_batch_metrics(got: dict, streams: list[str]) -> None:
+    """The reference's per-batch log line and per-stream metrics, from
+    the values observed on the replication write (no Spark job)."""
+    now = time.time()
+    log.info(
+        "Total Batch Size: %d, Successfully Processed: %d",
+        got["n_in"],
+        sum(got[f"n_{i}"] for i in range(len(streams))),
+    )
+    for i, s in enumerate(streams):
+        if got[f"n_{i}"]:
+            arrival = got[f"arrival_{i}"]
+            log.info(
+                "StreamName: %s, ThroughPut: %d, ReplicationLagSeconds: %s",
+                s,
+                got[f"n_{i}"],
+                None if arrival is None else round(now - arrival, 3),
+            )
 
 
 def streaming_dedup(
@@ -571,7 +577,7 @@ def streaming_rollup_maintenance(
     A replayed batch N therefore recomputes v{N} from the same v{N-1} it
     used the first time — byte-identical, no double counting.  Version
     directories + an atomically-replaced pointer file follow
-    sinks.upsert_checkpoint's crash-safety scheme; GC keeps the current
+    sinks.upsert_checkpoint_rows's crash-safety scheme; GC keeps the current
     and previous versions (the previous is exactly what a replay of the
     in-flight batch needs).
 

@@ -23,9 +23,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-CHECKPOINT_COLS = ("streamName", "lastReplicatedCommitTimestamp")
+from pyspark.sql import DataFrame, SparkSession
 
 
 def append_replicated(batch_df: DataFrame, out_dir: str) -> None:
@@ -98,15 +96,15 @@ def read_checkpoint_table(spark: SparkSession, table_dir: str) -> DataFrame:
     )
 
 
-def upsert_checkpoint(batch_checkpoint: DataFrame, table_dir: str) -> None:
+def upsert_checkpoint_rows(incoming: dict[str, str], table_dir: str) -> None:
     """Idempotent monotone upsert: new value = max(existing, incoming).
 
-    The distributed part — reducing a micro-batch to one (stream, max
-    commit ts) row per stream — happens in the caller's Spark plan; what
-    arrives here is control-plane metadata bounded by the STREAM COUNT,
-    so the merge+write is driver-side pyarrow (collecting it is O(#
-    streams), not O(data); doing this as Spark jobs costs two job
-    launches per micro-batch for a 5-row table).
+    ``incoming`` maps stream → max commit timestamp of one micro-batch.
+    The distributed part — reducing a micro-batch to those maxes —
+    happens in the caller's Spark plan (the streaming job observes them
+    on its replication write); what arrives here is control-plane
+    metadata bounded by the STREAM COUNT, so the merge+write is
+    driver-side pyarrow and costs zero Spark jobs.
 
     Durability: versioned directories + an atomically-replaced pointer
     file (``os.replace`` is atomic on POSIX).  A crash at ANY step
@@ -116,21 +114,6 @@ def upsert_checkpoint(batch_checkpoint: DataFrame, table_dir: str) -> None:
     At scale this becomes Delta/Iceberg MERGE (same log-plus-snapshot
     idea) or a DynamoDB conditional write.
     """
-    # max per stream even if the caller's frame has duplicate stream rows
-    # (a plain dict build would let the LAST row win)
-    incoming: dict[str, str] = {}
-    for r in batch_checkpoint.select(*CHECKPOINT_COLS).collect():
-        s, t = r["streamName"], r["lastReplicatedCommitTimestamp"]
-        if t is not None and (s not in incoming or t > incoming[s]):
-            incoming[s] = t
-    upsert_checkpoint_rows(incoming, table_dir)
-
-
-def upsert_checkpoint_rows(incoming: dict[str, str], table_dir: str) -> None:
-    """Dict-based twin of :func:`upsert_checkpoint` — for callers that
-    already hold the per-stream maxes driver-side (the streaming job
-    computes them as Observation aggregates riding the replication
-    write), so committing the checkpoint costs zero Spark jobs."""
     merged = _read_checkpoint_rows(table_dir)
     for s, t in incoming.items():
         if s not in merged or t > merged[s]:

@@ -17,12 +17,16 @@ def plan_of(spark, sf_dir, name) -> str:
     return QUERIES[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
 
 
-def test_gate_join_is_broadcast(spark, sf_dir):
-    """Op 5: the config side must broadcast — the stream side never
-    shuffles for the gate (Handler does one tiny Query per batch)."""
+def test_gate_is_a_filter_without_join(spark, sf_dir):
+    """Op 5: the config is resolved on the driver (Handler does one tiny
+    Query per batch), so the gate is an IN filter on the stream side:
+    no join of any strategy, and no shuffle beyond the per-stream
+    aggregation's one."""
     plan = plan_of(spark, sf_dir, "kr_active_region_gate")
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    for join in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin"):
+        assert join not in plan
+    assert " IN (kds-click,kds-view)" in plan
+    assert plan.count("Exchange") == 1
 
 
 def test_q5_all_dim_joins_broadcast(spark, sf_dir):

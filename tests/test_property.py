@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from aws_kinesis_data_streams_replicator_spark.operators.joins import as_of_join
 from aws_kinesis_data_streams_replicator_spark.streaming.sinks import (
     read_checkpoint_table,
-    upsert_checkpoint,
+    upsert_checkpoint_rows,
 )
 
 SLOW = settings(
@@ -95,16 +95,21 @@ def test_checkpoint_monotone_under_any_replay_order(spark, tmp_path_factory, bat
     each stream's checkpoint at its global max commit timestamp."""
     table = str(tmp_path_factory.mktemp("cp") / "cp")
 
-    def df_of(batch):
-        vals = ", ".join(f"('{s}', '2024-01-01T00:00:{t:02d}.{t:06d}Z')" for s, t in batch)
-        return spark.sql(
-            f"SELECT * FROM VALUES {vals} AS t(streamName, lastReplicatedCommitTimestamp)"
-        )
+    def ts(t):
+        return f"2024-01-01T00:00:{t:02d}.{t:06d}Z"
+
+    def maxes_of(batch):
+        # one micro-batch's per-stream maxes, as the streaming job
+        # observes them on its replication write
+        out: dict[str, str] = {}
+        for s, t in batch:
+            out[s] = max(out.get(s, ts(t)), ts(t))
+        return out
 
     for b in batches:
-        upsert_checkpoint(df_of(b), table)
+        upsert_checkpoint_rows(maxes_of(b), table)
     for b in reversed(batches):  # replay everything backwards
-        upsert_checkpoint(df_of(b), table)
+        upsert_checkpoint_rows(maxes_of(b), table)
 
     got = {
         r.streamName: r.lastReplicatedCommitTimestamp
@@ -113,8 +118,7 @@ def test_checkpoint_monotone_under_any_replay_order(spark, tmp_path_factory, bat
     want: dict[str, str] = {}
     for b in batches:
         for s, t in b:
-            v = f"2024-01-01T00:00:{t:02d}.{t:06d}Z"
-            want[s] = max(want.get(s, v), v)
+            want[s] = max(want.get(s, ts(t)), ts(t))
     assert got == want
 
 

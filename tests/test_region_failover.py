@@ -5,8 +5,8 @@ the other region takes over replication).
 Modeled as: drain phase 1 under config A, update the config, resume the
 SAME stream (same WAL) under config B.  Records arriving after the flip
 are gated by the new config; nothing already replicated is lost or
-duplicated.  (The stream-static config side is re-resolved per run,
-matching the reference's one DynamoDB Query per batch.)
+duplicated.  (The job re-reads the config at the start of every
+micro-batch, matching the reference's one DynamoDB Query per batch.)
 """
 
 from __future__ import annotations
@@ -104,7 +104,7 @@ def test_midbatch_crash_between_append_and_checkpoint(
     high-water marks a crash-free run produces."""
     from aws_kinesis_data_streams_replicator_spark.streaming import job as job_mod
 
-    real_upsert = job_mod.upsert_checkpoint
+    real_upsert = job_mod.upsert_checkpoint_rows
 
     env = envelope_from_events(load_table(spark, sf_dir, "events"))
     stage = str(tmp_path / "stage")
@@ -112,10 +112,21 @@ def test_midbatch_crash_between_append_and_checkpoint(
     files = stage_envelope_files(env, stage, n_files=3)
     cfg = _cfg(spark, [("kds-click", "us-east-1"), ("kds-view", "us-east-1")])
 
-    def gated_count(df):
+    def gated(df):
         return replication.gate_active_region(
             replication.with_decoded(df), cfg, "us-east-1"
-        ).count()
+        )
+
+    def gated_count(df):
+        return gated(df).count()
+
+    def checkpoint_of(df):
+        return {
+            r.streamName: r.lastReplicatedCommitTimestamp
+            for r in replication.checkpoint(
+                gated(df).where(F.col("commitTimestamp").isNotNull())
+            ).collect()
+        }
 
     n_all = gated_count(env)
     n_batch1 = gated_count(spark.read.parquet(files[1]))
@@ -123,14 +134,14 @@ def test_midbatch_crash_between_append_and_checkpoint(
 
     calls = {"n": 0}
 
-    def crashing_upsert(batch_checkpoint, table_dir):
+    def crashing_upsert(incoming, table_dir):
         calls["n"] += 1
         if calls["n"] == 2:
             # the append for THIS batch already ran one statement earlier
             raise RuntimeError("injected crash: after append, before upsert")
-        real_upsert(batch_checkpoint, table_dir)
+        real_upsert(incoming, table_dir)
 
-    monkeypatch.setattr(job_mod, "upsert_checkpoint", crashing_upsert)
+    monkeypatch.setattr(job_mod, "upsert_checkpoint_rows", crashing_upsert)
 
     def run():
         q = run_replication_stream(
@@ -156,13 +167,15 @@ def test_midbatch_crash_between_append_and_checkpoint(
     # write), but the checkpoint table still holds only batch 0's marks
     repl_mid = spark.read.parquet(os.path.join(out, "repl"))
     assert repl_mid.count() >= n_batch1
+    assert calls["n"] == 2
     cp_mid = {
         r.streamName: r.lastReplicatedCommitTimestamp
         for r in read_checkpoint_table(spark, os.path.join(out, "cp")).collect()
     }
+    assert cp_mid == checkpoint_of(spark.read.parquet(files[0]))
 
     # restart WITHOUT the fault: the WAL replays the failed batch
-    monkeypatch.setattr(job_mod, "upsert_checkpoint", real_upsert)
+    monkeypatch.setattr(job_mod, "upsert_checkpoint_rows", real_upsert)
     run()
 
     got = spark.read.parquet(os.path.join(out, "repl"))
@@ -173,14 +186,7 @@ def test_midbatch_crash_between_append_and_checkpoint(
     assert got.count() == n_all + n_batch1
     # checkpoint converges to the crash-free high-water marks, and never
     # moved backwards through the replay
-    expected_cp = {
-        r.streamName: r.lastReplicatedCommitTimestamp
-        for r in replication.checkpoint(
-            replication.gate_active_region(
-                replication.with_decoded(env), cfg, "us-east-1"
-            ).where(F.col("commitTimestamp").isNotNull())
-        ).collect()
-    }
+    expected_cp = checkpoint_of(env)
     cp_final = {
         r.streamName: r.lastReplicatedCommitTimestamp
         for r in read_checkpoint_table(spark, os.path.join(out, "cp")).collect()

@@ -123,3 +123,45 @@ def test_malformed_payload_yields_null_commit_ts(spark):
         replication.with_decoded(env), cfg, "us-east-1"
     )
     assert gated.first().commitTimestamp is None
+
+
+def test_gate_matches_broadcast_join_plan(spark):
+    """The driver-resolved gate keeps exactly the rows the former
+    stream-static plan kept: config collapsed to streams with one row,
+    broadcast inner join, case-insensitive region filter.  The config
+    covers every edge the two could disagree on."""
+    rows = ROWS + [
+        ("s-dup-same", "7", "007", "2024-01-01 00:00:30", '{"key": 7, "commitTimestamp": "2024-01-01T00:00:30Z"}'),
+        ("s-null-region", "8", "008", "2024-01-01 00:00:35", '{"key": 8, "commitTimestamp": "2024-01-01T00:00:35Z"}'),
+        ("s-null-and-set", "9", "009", "2024-01-01 00:00:40", '{"key": 9, "commitTimestamp": "2024-01-01T00:00:40Z"}'),
+    ]
+    env = replication.with_decoded(_mk_envelope(spark, rows))
+    cfg = spark.sql(
+        "SELECT * FROM VALUES "
+        "('s-active', 'us-east-1'), ('s-mixed', 'Us-East-1'), "
+        "('s-inactive', 'eu-west-1'), "
+        "('s-dup-config', 'us-east-1'), ('s-dup-config', 'eu-west-1'), "
+        "('s-dup-same', 'us-east-1'), ('s-dup-same', 'us-east-1'), "
+        "('s-null-region', NULL), "
+        "('s-null-and-set', NULL), ('s-null-and-set', 'us-east-1'), "
+        "(NULL, 'us-east-1') "
+        "AS t(streamName, activeRegion)"
+    )
+    # the former plan, inline: prepare_config + broadcast join + filter
+    one_row = (
+        cfg.groupBy("streamName")
+        .agg(F.count(F.lit(1)).alias("n_cfg"), F.min("activeRegion").alias("activeRegion"))
+        .where(F.col("n_cfg") == 1)
+        .drop("n_cfg")
+    )
+    joined = (
+        env.join(F.broadcast(one_row), "streamName", "inner")
+        .where(F.lower(F.col("activeRegion")) == F.lit("us-east-1"))
+        .drop("activeRegion")
+    )
+    cols = sorted(env.columns)
+    want = sorted(joined.select(cols).collect())
+    got = sorted(replication.gate_active_region(env, cfg, "us-east-1").select(cols).collect())
+    assert got == want
+    assert {r.streamName for r in got} == {"s-active", "s-mixed"}
+    assert replication.active_streams(cfg, "US-EAST-1") == ["s-active", "s-mixed"]

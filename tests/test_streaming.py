@@ -1,9 +1,12 @@
 """Structured Streaming wrap: end-to-end replication, restart/resume
-(op 9), idempotent checkpoint upsert, dead-lettering, streaming dedup."""
+(op 9), idempotent checkpoint upsert, dead-lettering, per-batch metrics,
+one Spark job per trigger, streaming dedup."""
 
 from __future__ import annotations
 
+import logging
 import os
+import re
 
 import pytest
 
@@ -12,10 +15,9 @@ from pyspark.sql import functions as F
 from aws_kinesis_data_streams_replicator_spark.operators import replication
 from aws_kinesis_data_streams_replicator_spark.sources.envelope import envelope_from_events
 from aws_kinesis_data_streams_replicator_spark.sources.tables import load_table
-from aws_kinesis_data_streams_replicator_spark.streaming.listener import (
-    ReplicationMetricsListener,
+from aws_kinesis_data_streams_replicator_spark.streaming.sinks import (
+    upsert_checkpoint_rows,
 )
-from aws_kinesis_data_streams_replicator_spark.streaming.sinks import upsert_checkpoint
 from aws_kinesis_data_streams_replicator_spark.streaming.source import (
     read_envelope_stream,
     stage_envelope_files,
@@ -43,7 +45,7 @@ def envelope(spark, sf_dir):
     return envelope_from_events(load_table(spark, sf_dir, "events"))
 
 
-def _run_to_completion(spark, stage_dir, out, cfg, listener=None):
+def _run_to_completion(spark, stage_dir, out, cfg):
     stream = read_envelope_stream(spark, stage_dir, max_batches_per_trigger=1)
     q = run_replication_stream(
         stream,
@@ -60,17 +62,26 @@ def _run_to_completion(spark, stage_dir, out, cfg, listener=None):
     return q
 
 
-def test_stream_matches_batch_pipeline(spark, envelope, tmp_path):
+_SUMMARY = re.compile(r"Total Batch Size: (\d+), Successfully Processed: (\d+)")
+
+
+def _batch_summaries(caplog) -> list[tuple[int, int]]:
+    """(total, processed) of every per-batch summary line the job logged."""
+    return [
+        (int(m[1]), int(m[2]))
+        for r in caplog.records
+        if r.name == "akr.replication"
+        and (m := _SUMMARY.fullmatch(r.getMessage()))
+    ]
+
+
+def test_stream_matches_batch_pipeline(spark, envelope, tmp_path, caplog):
     """The incremental run must produce exactly the batch-mode answer."""
     out = str(tmp_path / "out")
     stage = str(tmp_path / "stage")
-    listener = ReplicationMetricsListener()
-    spark.streams.addListener(listener)
-    try:
-        stage_envelope_files(envelope, stage, n_files=4)
-        _run_to_completion(spark, stage, out, _config_df(spark))
-    finally:
-        spark.streams.removeListener(listener)
+    caplog.set_level(logging.INFO, logger="akr.replication")
+    stage_envelope_files(envelope, stage, n_files=4)
+    _run_to_completion(spark, stage, out, _config_df(spark))
 
     got = spark.read.parquet(os.path.join(out, "replicated"))
     want = replication.replicated_records(
@@ -94,8 +105,48 @@ def test_stream_matches_batch_pipeline(spark, envelope, tmp_path):
         ).collect()
     }
     assert cp == want_cp
-    # one metrics row per micro-batch, log contract fed by observe()
-    assert len([m for m in listener.metrics if m["n_records"]]) >= 1
+    # the reference's summary line, one per micro-batch: the total is
+    # counted before the gate, the processed count after it
+    summaries = _batch_summaries(caplog)
+    assert len(summaries) == 4
+    assert sum(t for t, _ in summaries) == envelope.count()
+    assert sum(m for _, m in summaries) == want.count()
+    per_stream = [
+        r.getMessage()
+        for r in caplog.records
+        if r.getMessage().startswith("StreamName: ")
+    ]
+    assert {m.split(",")[0] for m in per_stream} == {
+        f"StreamName: {s}" for s in want_cp
+    }
+    assert all("ReplicationLagSeconds: " in m for m in per_stream)
+
+
+def test_one_spark_job_per_trigger(spark, envelope, tmp_path):
+    """The at-least-once hot path: each data-bearing trigger runs exactly
+    one Spark job, the replication write.  The config is resolved on the
+    driver and the checkpoint marks and metrics ride the write as
+    Observation aggregates."""
+    out = str(tmp_path / "out")
+    stage = str(tmp_path / "stage")
+    stage_envelope_files(envelope, stage, n_files=3)
+    q = run_replication_stream(
+        read_envelope_stream(spark, stage, max_batches_per_trigger=1),
+        _config_df(spark),
+        "us-east-1",
+        replicated_dir=os.path.join(out, "replicated"),
+        checkpoint_table_dir=os.path.join(out, "checkpoint_table"),
+        stream_checkpoint_dir=os.path.join(out, "wal"),
+    )
+    try:
+        q.processAllAvailable()
+        triggers = [p for p in q.recentProgress if p.numInputRows]
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    finally:
+        q.stop()
+        q.awaitTermination(30)
+    assert len(triggers) == 3
+    assert len(jobs) == len(triggers)
 
 
 def test_restart_resumes_without_loss_or_dup(spark, envelope, tmp_path):
@@ -134,16 +185,12 @@ def test_restart_resumes_without_loss_or_dup(spark, envelope, tmp_path):
 def test_checkpoint_upsert_is_idempotent_and_monotone(spark, tmp_path):
     table = str(tmp_path / "cp")
 
-    def cp_df(rows):
-        vals = ", ".join(f"('{s}', '{t}')" for s, t in rows)
-        return spark.sql(
-            f"SELECT * FROM VALUES {vals} AS t(streamName, lastReplicatedCommitTimestamp)"
-        )
-
-    upsert_checkpoint(cp_df([("s1", "2024-01-01T00:00:05Z")]), table)
-    upsert_checkpoint(cp_df([("s1", "2024-01-01T00:00:09Z"), ("s2", "2024-01-01T00:00:01Z")]), table)
+    upsert_checkpoint_rows({"s1": "2024-01-01T00:00:05Z"}, table)
+    upsert_checkpoint_rows(
+        {"s1": "2024-01-01T00:00:09Z", "s2": "2024-01-01T00:00:01Z"}, table
+    )
     # replay of an OLD batch (Lambda-style retry) must not move s1 backwards
-    upsert_checkpoint(cp_df([("s1", "2024-01-01T00:00:05Z")]), table)
+    upsert_checkpoint_rows({"s1": "2024-01-01T00:00:05Z"}, table)
     got = {
         r.streamName: r.lastReplicatedCommitTimestamp
         for r in read_checkpoint_table(spark, table).collect()
@@ -158,13 +205,7 @@ def test_checkpoint_crash_leaves_previous_version_readable(spark, tmp_path):
 
     table = str(tmp_path / "cp")
 
-    def cp_df(rows):
-        vals = ", ".join(f"('{s}', '{t}')" for s, t in rows)
-        return spark.sql(
-            f"SELECT * FROM VALUES {vals} AS t(streamName, lastReplicatedCommitTimestamp)"
-        )
-
-    upsert_checkpoint(cp_df([("s1", "2024-01-01T00:00:05Z")]), table)
+    upsert_checkpoint_rows({"s1": "2024-01-01T00:00:05Z"}, table)
     # simulate a crashed upsert: new version dir written, pointer NOT moved
     os.makedirs(os.path.join(table, "v99"), exist_ok=True)
     got = {
@@ -173,7 +214,7 @@ def test_checkpoint_crash_leaves_previous_version_readable(spark, tmp_path):
     }
     assert got == {"s1": "2024-01-01T00:00:05Z"}
     # recovery: the next successful upsert proceeds normally
-    upsert_checkpoint(cp_df([("s1", "2024-01-01T00:00:07Z")]), table)
+    upsert_checkpoint_rows({"s1": "2024-01-01T00:00:07Z"}, table)
     got2 = {
         r.streamName: r.lastReplicatedCommitTimestamp
         for r in read_checkpoint_table(spark, table).collect()
@@ -181,7 +222,8 @@ def test_checkpoint_crash_leaves_previous_version_readable(spark, tmp_path):
     assert got2 == {"s1": "2024-01-01T00:00:07Z"}
 
 
-def test_malformed_payload_goes_to_dead_letter(spark, tmp_path):
+def test_malformed_payload_goes_to_dead_letter(spark, tmp_path, caplog):
+    caplog.set_level(logging.INFO, logger="akr.replication")
     out = str(tmp_path / "out")
     stage = str(tmp_path / "stage")
     env = spark.sql(
@@ -201,6 +243,8 @@ def test_malformed_payload_goes_to_dead_letter(spark, tmp_path):
     assert [r.sequenceNumber for r in dl.collect()] == ["002"]
     cp = read_checkpoint_table(spark, os.path.join(out, "checkpoint_table"))
     assert cp.first().lastReplicatedCommitTimestamp == "2024-01-01T00:00:00Z"
+    # the dead-lettered record is not counted as processed
+    assert _batch_summaries(caplog) == [(2, 1)]
 
 
 def test_streaming_dedup_within_watermark(spark, sf_dir, tmp_path):

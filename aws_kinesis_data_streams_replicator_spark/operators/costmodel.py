@@ -30,6 +30,8 @@ hex digits, mod W) — grids built here merge cell-wise with both.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 CMS_DEPTH = 4
@@ -271,20 +273,12 @@ def plan_equijoin_from_catalog(
     session cost a dict lookup.  The fact tables are touched only by
     the join itself.  Returns ``(joined_df, stats_row)`` exactly like
     ``plan_equijoin``."""
-    from pyspark.errors import AnalysisException
-
     def load_or_build(df: DataFrame, key: str, relation: str) -> DataFrame:
-        try:
-            return read_key_sketch(
-                df.sparkSession, catalog_dir, relation, key, depth, width
-            )
-        except AnalysisException:  # PATH_NOT_FOUND: first sight
-            write_key_sketch(
-                df, key, catalog_dir, relation, depth, width
-            )
-            return read_key_sketch(
-                df.sparkSession, catalog_dir, relation, key, depth, width
-            )
+        if not os.path.exists(sketch_path(catalog_dir, relation, key)):
+            write_key_sketch(df, key, catalog_dir, relation, depth, width)
+        return read_key_sketch(
+            df.sparkSession, catalog_dir, relation, key, depth, width
+        )
 
     memo_key = (
         catalog_dir,

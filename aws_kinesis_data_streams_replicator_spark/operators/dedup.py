@@ -282,16 +282,6 @@ def simhash_fingerprints(documents: DataFrame) -> DataFrame:
     )
 
 
-def simhash_dup_clusters(documents: DataFrame) -> DataFrame:
-    """Groups of documents with identical SimHash (candidate near-dups)."""
-    return (
-        simhash_fingerprints(documents)
-        .groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_doc_id"))
-        .where(F.col("n_docs") > 1)
-    )
-
-
 def simhash64_fingerprints(documents: DataFrame) -> DataFrame:
     """doc_id + 64-bit SimHash bitstring (two seeded 32-bit md5 families).
 

@@ -45,16 +45,6 @@ MEDIA_SCHEMA = StructType(
     ]
 )
 
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("fake_width", LongType()),
-        StructField("fake_height", LongType()),
-    ]
-)
-
 
 def media_from_documents(documents: DataFrame) -> DataFrame:
     """Derive a synthetic media table: the UTF-8 bytes of ``text`` stand
@@ -69,14 +59,6 @@ def media_from_documents(documents: DataFrame) -> DataFrame:
         F.octet_length(payload).cast("long").alias("n_bytes"),
         F.md5(F.col("text")).alias("checksum"),
     )
-
-
-def fake_decode_meta(payload: bytes) -> tuple[int, int]:
-    """Byte-stream pseudo-dimensions for NON-image payloads (audio/raw
-    rows in a mixed media table): a deterministic function of length
-    only, never parsed as pixels."""
-    n = len(payload)
-    return (n % 640) + 1, (n % 480) + 1
 
 
 # --------------------------------------------------------------------------
@@ -273,33 +255,6 @@ def extract_image_features(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=IMAGE_FEATURE_SCHEMA)
-
-
-def extract_features(media: DataFrame, batch_hint_rows: int = 10_000) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    ``mapInPandas`` keeps whole Arrow batches on the Python side; at
-    scale, repartition upstream so each task's batches fit executor
-    memory (payloads are the dominant bytes — size partitions by bytes,
-    not rows).
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dims = pdf["payload"].map(fake_decode_meta)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": pdf["n_bytes"],
-                    "fake_width": [d[0] for d in dims],
-                    "fake_height": [d[1] for d in dims],
-                }
-            )
-
-    from .util import spread
-
-    return spread(media).mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
 RESIZED_SCHEMA = StructType(

@@ -21,18 +21,21 @@ next batch without restarting the query.
 from __future__ import annotations
 
 import logging
+import os
 import time
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import replication
 from .sinks import (  # noqa: F401
     append_replicated,
+    commit_version,
+    latest_version,
     read_checkpoint_table,
     replicated_exactly_once,
     upsert_checkpoint_rows,
+    version_path,
 )
 
 log = logging.getLogger("akr.replication")
@@ -48,10 +51,11 @@ def run_replication_stream(
     dead_letter_dir: str | None = None,
     exactly_once: bool = False,
 ) -> StreamingQuery:
-    """``exactly_once=True`` writes each micro-batch into its own
-    ``batch_id=N`` partition (idempotent under WAL replay) — available
-    because the file target can overwrite; the default append mode
-    mirrors the reference's at-least-once Kinesis PutRecord contract.
+    """``exactly_once=True`` writes each micro-batch (and its dead
+    letters) into its own ``batch_id=N`` partition (idempotent under
+    WAL replay) — available because the file target can overwrite; the
+    default append mode mirrors the reference's at-least-once Kinesis
+    PutRecord contract.
 
     Per-trigger cost (the hot path at any scale): ONE Spark job, the
     replication write.  Each micro-batch resolves the active streams on
@@ -69,6 +73,12 @@ def run_replication_stream(
     (Handler.java:94-122)."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        def write(df: DataFrame, out_dir: str) -> None:
+            if exactly_once:
+                replicated_exactly_once(df, out_dir, batch_id)
+            else:
+                append_replicated(df, out_dir)
+
         streams = replication.active_streams(config, current_region)
         two_writes = dead_letter_dir is not None
         if two_writes:
@@ -82,11 +92,13 @@ def run_replication_stream(
                 # Malformed payloads: the reference aborts the batch and
                 # retries forever (Handler.java:90-93); a poison message
                 # would wedge the stream, so the engine dead-letters it
-                # instead (documented deviation — at-least-once is kept
-                # for well-formed records either way).
-                batch_df.where(
-                    active & F.col("commitTimestamp").isNull()
-                ).write.mode("append").parquet(dead_letter_dir)
+                # instead (documented deviation).  Dead letters go through
+                # the same sink as the good rows, so a replay under
+                # exactly_once rewrites them instead of duplicating them.
+                write(
+                    batch_df.where(active & F.col("commitTimestamp").isNull()),
+                    dead_letter_dir,
+                )
                 well_formed = F.col("commitTimestamp").isNotNull()
             aggs = [F.count(F.lit(1)).alias("n_in")]
             for i, s in enumerate(streams):
@@ -107,10 +119,7 @@ def run_replication_stream(
             out = replication.replicated_records(
                 batch_df.observe(obs, *aggs).where(active & well_formed)
             )
-            if exactly_once:
-                replicated_exactly_once(out, replicated_dir, batch_id)
-            else:
-                append_replicated(out, replicated_dir)
+            write(out, replicated_dir)
             got = obs.get  # no wait: the write action above finished
             upsert_checkpoint_rows(
                 {
@@ -485,8 +494,6 @@ def streaming_neardup_with_index_maintenance(
     parquet partitioned by band_id, so the per-band probe prunes to one
     partition directory.
     """
-    import os as _os
-
     from ..operators.dedup import minhash_band_buckets, minhash_signatures_narrow
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -499,7 +506,12 @@ def streaming_neardup_with_index_maintenance(
             n_bands=n_bands,
         ).persist()
         try:
-            try:
+            # Only a missing index means "first batch": failing to read
+            # an existing one (schema drift, corrupt footer) fails the
+            # batch so the WAL retries it, instead of silently appending
+            # undetected duplicates to both out_dir and the index.
+            kept = batch_df
+            if os.path.isdir(index_dir):
                 idx = spark.read.parquet(index_dir).select("band_id", "bucket")
                 hit = (
                     buckets.join(idx, ["band_id", "bucket"], "left_semi")
@@ -507,19 +519,8 @@ def streaming_neardup_with_index_maintenance(
                     .distinct()
                 )
                 kept = batch_df.join(hit, "doc_id", "left_anti")
-            except AnalysisException as e:
-                # Only the first-batch missing-index case may be swallowed;
-                # any other analysis failure (schema drift, corrupt footer)
-                # must fail the batch so the WAL retries it — silently
-                # disabling dedup would append undetected duplicates to
-                # both out_dir and the index.  (Execution-time errors in
-                # the join surface at kept.write below and fail the batch
-                # too, by design.)
-                if "PATH_NOT_FOUND" not in str(e):
-                    raise
-                kept = batch_df  # first batch: no index yet
             kept = kept.persist()
-            kept.write.mode("append").parquet(_os.path.join(out_dir))
+            kept.write.mode("append").parquet(out_dir)
             (
                 buckets.join(kept.select("doc_id"), "doc_id", "left_semi")
                 .write.mode("append")
@@ -542,19 +543,11 @@ def streaming_neardup_with_index_maintenance(
 # Incremental rollup maintenance (streaming IVM)
 # --------------------------------------------------------------------------
 
-_ROLLUP_PTR = "_CURRENT"
-
 
 def read_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame | None:
     """Current committed rollup version, or None before the first batch."""
-    import os
-
-    ptr = os.path.join(rollup_dir, _ROLLUP_PTR)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        v = f.read().strip()
-    return spark.read.parquet(os.path.join(rollup_dir, v))
+    v = latest_version(rollup_dir)
+    return None if v is None else spark.read.parquet(version_path(rollup_dir, v))
 
 
 def streaming_rollup_maintenance(
@@ -572,24 +565,16 @@ def streaming_rollup_maintenance(
     never rescanned; per-batch work is O(batch) + O(|keys|).
 
     Exactly-once under WAL replay WITHOUT idempotent-append tricks: the
-    rollup version is NAMED BY batch_id, and the merge always reads the
-    largest version STRICTLY BELOW the current batch_id (never "latest").
-    A replayed batch N therefore recomputes v{N} from the same v{N-1} it
-    used the first time — byte-identical, no double counting.  Version
-    directories + an atomically-replaced pointer file follow
-    sinks.upsert_checkpoint_rows's crash-safety scheme; GC keeps the current
-    and previous versions (the previous is exactly what a replay of the
-    in-flight batch needs).
+    rollup is ``sinks.commit_version`` state NAMED BY batch_id, and the
+    merge reads the newest version STRICTLY BELOW batch_id (never
+    "latest"), so a replayed batch N merges into the same v{N-1} and
+    finds v{N} already committed — no double counting.
 
     Scale notes: the merge is a Spark job over |keys| + |batch keys|
     rows keyed by ``key_col`` — map-side combined, no wide shuffle; the
     rollup read is a single small parquet scan.  At warehouse scale the
-    version/pointer commit becomes a Delta/Iceberg transactional MERGE
-    (same log-plus-snapshot idea)."""
-    import os
-    import re
-    import shutil
-
+    version commit becomes a Delta/Iceberg transactional MERGE (same
+    log-plus-snapshot idea)."""
     agg_cols = [
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.sum("cents").cast("long").alias("sum_cents"),
@@ -601,15 +586,6 @@ def streaming_rollup_maintenance(
         F.max("max_cents").cast("long").alias("max_cents"),
     ]
 
-    def _versions(d: str) -> list[int]:
-        if not os.path.isdir(d):
-            return []
-        return sorted(
-            int(m.group(1))
-            for name in os.listdir(d)
-            if (m := re.fullmatch(r"v(\d+)", name))
-        )
-
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         partial = (
@@ -617,23 +593,15 @@ def streaming_rollup_maintenance(
             .groupBy("key")
             .agg(*agg_cols)
         )
-        prev = [v for v in _versions(rollup_dir) if v < batch_id]
-        if prev:
-            prev_df = spark.read.parquet(
-                os.path.join(rollup_dir, f"v{prev[-1]}")
-            )
+        prev = latest_version(rollup_dir, below=batch_id)
+        if prev is not None:
+            prev_df = spark.read.parquet(version_path(rollup_dir, prev))
             partial = prev_df.unionByName(partial).groupBy("key").agg(*merge_cols)
-        vdir = os.path.join(rollup_dir, f"v{batch_id}")
-        partial.write.mode("overwrite").parquet(vdir)
-        os.makedirs(rollup_dir, exist_ok=True)
-        ptr_tmp = os.path.join(rollup_dir, _ROLLUP_PTR + ".tmp")
-        with open(ptr_tmp, "w") as f:
-            f.write(f"v{batch_id}")
-        os.replace(ptr_tmp, os.path.join(rollup_dir, _ROLLUP_PTR))
-        keep = {f"v{batch_id}"} | {f"v{v}" for v in prev[-1:]}
-        for name in os.listdir(rollup_dir):
-            if re.fullmatch(r"v\d+", name) and name not in keep:
-                shutil.rmtree(os.path.join(rollup_dir, name), ignore_errors=True)
+        commit_version(
+            rollup_dir,
+            batch_id,
+            lambda tmp: partial.write.mode("overwrite").parquet(tmp),
+        )
 
     return (
         events_stream.writeStream.foreachBatch(merge_batch)
@@ -969,10 +937,10 @@ def streaming_chunk_gate(
 def streaming_compaction_maintenance(
     files_stream: DataFrame,
     work_dir: str,
+    checkpoint_dir: str,
     key_col: str = "file_key",
     size_col: str = "size_bytes",
     target_bytes: int = 1 << 20,
-    checkpoint_dir: str | None = None,
 ) -> StreamingQuery:
     """Continuous compaction maintenance — the streaming leg of
     operators/layout.py ``compaction_plan``: micro-batch ingest leaves
@@ -984,10 +952,9 @@ def streaming_compaction_maintenance(
     Exactly-once effective under WAL replay with no stateful operator:
 
     * per-epoch state — the open tail's files plus a 1-row
-      (bins_emitted, bytes_seen) meta — lives at
-      ``work_dir/state/asof=<batch_id>``; a replayed batch N re-reads
-      ``asof=N-1`` (never clobbered by N's failure) and recomputes
-      deterministically;
+      (bins_emitted) meta — is one ``sinks.commit_version`` version of
+      ``work_dir/state`` named by batch_id; a replayed batch N re-reads
+      the version below N and finds its own already committed;
     * closed bins land at ``work_dir/bins/epoch=<batch_id>`` via full
       directory overwrite, so the replay rewrites byte-identical
       output instead of duplicating it;
@@ -1000,27 +967,22 @@ def streaming_compaction_maintenance(
 
     Scale notes: inventories are metadata (a few rows per trigger);
     state reads/writes are one tiny parquet each; the only per-trigger
-    Spark work is the bounded compaction_step plan.  Old ``asof``
-    epochs are pruned best-effort to two."""
-    import os
-    import shutil
-
+    Spark work is the bounded compaction_step plan."""
     from ..operators.layout import compaction_step_detail
+
+    state = f"{work_dir}/state"
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        state = f"{work_dir}/state"
-        prev = f"{state}/asof={batch_id - 1}"
         pending = None
         bins_emitted = 0
-        try:
+        v = latest_version(state, below=batch_id)
+        if v is not None:
+            prev = version_path(state, v)
             pending = spark.read.parquet(f"{prev}/pending")
             bins_emitted = int(
                 spark.read.parquet(f"{prev}/meta").first()["bins_emitted"]
             )
-        except AnalysisException:
-            pass  # first batch (or fresh work_dir): empty state
-        if pending is not None:
             # state-layout guard: before r10 the pending state carried
             # only (key_col, size_col); it now persists EVERY inventory
             # column so the files/ work list is exact-membership.
@@ -1053,28 +1015,27 @@ def streaming_compaction_maintenance(
         closed_files.write.mode("overwrite").parquet(
             f"{work_dir}/files/epoch={batch_id}"
         )
-        cur = f"{state}/asof={batch_id}"
-        new_pending.write.mode("overwrite").parquet(f"{cur}/pending")
-        spark.sql(
-            f"SELECT CAST({bins_emitted + n_closed} AS BIGINT) "
-            "AS bins_emitted"
-        ).write.mode("overwrite").parquet(f"{cur}/meta")
-        # keep two epochs of state: current (for N+1) and previous
-        # (for a replay of N); everything older is dead
-        for d in (f"{state}/asof={batch_id - 2}",):
-            if os.path.isdir(d):
-                shutil.rmtree(d, ignore_errors=True)
 
-    writer = files_stream.writeStream.foreachBatch(step)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+        def write_state(tmp: str) -> None:
+            new_pending.write.parquet(f"{tmp}/pending")
+            spark.sql(
+                f"SELECT CAST({bins_emitted + n_closed} AS BIGINT) "
+                "AS bins_emitted"
+            ).write.parquet(f"{tmp}/meta")
+
+        commit_version(state, batch_id, write_state)
+
+    return (
+        files_stream.writeStream.foreachBatch(step)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+    )
 
 
 def streaming_corpus_refresh(
     docs_stream: DataFrame,
     work_dir: str,
-    checkpoint_dir: str | None = None,
+    checkpoint_dir: str,
     k_shingle: int = 3,
     n_hashes: int = 8,
     n_bands: int = 4,
@@ -1095,10 +1056,9 @@ def streaming_corpus_refresh(
     (the streaming_compaction_maintenance state discipline):
 
     * per-epoch state — the doc inventory, the band index, the cluster
-      labels, and the published set — lives at
-      ``work_dir/state/asof=<batch_id>``; a replayed batch N re-reads
-      ``asof=N-1`` (never clobbered by N's failure) and recomputes
-      deterministically;
+      labels, and the published set — is one ``sinks.commit_version``
+      version of ``work_dir/state`` named by batch_id; a replayed batch
+      N re-reads the version below N and finds its own already committed;
     * the epoch's publication changes land at
       ``work_dir/changes/epoch=<batch_id>`` (columns doc_id / change /
       cluster_id — after-label for added, before-label for retracted)
@@ -1121,40 +1081,28 @@ def streaming_corpus_refresh(
     hash-agg over the label table and the diff two anti-joins on
     doc_id.  State grows with the corpus (it IS the corpus index), not
     with time."""
-    import os
-    import shutil
-
     from ..operators import clustering
     from ..operators.dedup import minhash_band_buckets, minhash_signatures
 
-    def _empty(spark: SparkSession, schema_sql: str) -> DataFrame:
-        return spark.sql(f"SELECT {schema_sql} WHERE false")
+    state = f"{work_dir}/state"
+    # the state's tables, with the columns they start empty with
+    tables = {
+        "docs": "CAST(NULL AS BIGINT) AS doc_id",
+        "bands": "CAST(NULL AS BIGINT) AS doc_id, CAST(NULL AS INT) AS band_id, "
+        "CAST(NULL AS STRING) AS bucket",
+        "cc": "CAST(NULL AS BIGINT) AS doc_id, CAST(NULL AS BIGINT) AS cluster_id",
+        "pub": "CAST(NULL AS BIGINT) AS lbl, CAST(NULL AS BIGINT) AS doc_id",
+    }
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        state = f"{work_dir}/state"
-        prev = f"{state}/asof={batch_id - 1}"
-        try:
-            prev_docs = spark.read.parquet(f"{prev}/docs")
-            prev_bands = spark.read.parquet(f"{prev}/bands")
-            prev_cc = spark.read.parquet(f"{prev}/cc")
-            prev_pub = spark.read.parquet(f"{prev}/pub")
-        except AnalysisException:  # first batch / fresh work_dir
-            prev_docs = _empty(spark, "CAST(NULL AS BIGINT) AS doc_id")
-            prev_bands = _empty(
-                spark,
-                "CAST(NULL AS BIGINT) AS doc_id, "
-                "CAST(NULL AS INT) AS band_id, CAST(NULL AS STRING) AS bucket",
-            )
-            prev_cc = _empty(
-                spark,
-                "CAST(NULL AS BIGINT) AS doc_id, "
-                "CAST(NULL AS BIGINT) AS cluster_id",
-            )
-            prev_pub = _empty(
-                spark,
-                "CAST(NULL AS BIGINT) AS lbl, CAST(NULL AS BIGINT) AS doc_id",
-            )
+        v = latest_version(state, below=batch_id)
+        prev_docs, prev_bands, prev_cc, prev_pub = (
+            spark.sql(f"SELECT {cols} WHERE false")
+            if v is None
+            else spark.read.parquet(f"{version_path(state, v)}/{name}")
+            for name, cols in tables.items()
+        )
         new_docs = (
             batch_df.select("doc_id", "text")
             .dropDuplicates(["doc_id"])
@@ -1235,16 +1183,15 @@ def streaming_corpus_refresh(
         ).write.mode("overwrite").parquet(
             f"{work_dir}/manifest/epoch={batch_id}"
         )
-        cur = f"{state}/asof={batch_id}"
-        inventory.write.mode("overwrite").parquet(f"{cur}/docs")
-        all_bands.write.mode("overwrite").parquet(f"{cur}/bands")
-        folded.write.mode("overwrite").parquet(f"{cur}/cc")
-        pub.write.mode("overwrite").parquet(f"{cur}/pub")
-        for d in (f"{state}/asof={batch_id - 2}",):
-            if os.path.isdir(d):
-                shutil.rmtree(d, ignore_errors=True)
 
-    writer = docs_stream.writeStream.foreachBatch(step)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+        def write_state(tmp: str) -> None:
+            for name, df in zip(tables, (inventory, all_bands, folded, pub)):
+                df.write.parquet(f"{tmp}/{name}")
+
+        commit_version(state, batch_id, write_state)
+
+    return (
+        docs_stream.writeStream.foreachBatch(step)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+    )

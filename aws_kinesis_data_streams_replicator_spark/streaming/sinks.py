@@ -1,4 +1,5 @@
-"""foreachBatch sinks: replication append + keyed checkpoint upsert.
+"""foreachBatch sinks: replication append, keyed checkpoint upsert, and
+the one commit protocol for versioned foreachBatch state.
 
 Delivery contract (SURVEY §2 op 9, §2.1): Structured Streaming's
 ``checkpointLocation`` WAL replays whole micro-batches after failure —
@@ -13,15 +14,22 @@ sinks therefore must tolerate replays:
   batch can never move a checkpoint backwards (monotone, matching
   last-writer-wins-in-sequence-order of Handler.java:85).
 
-The checkpoint "table" is a tiny parquet key-value table (one row per
-stream) — the DynamoDB Global Table stand-in.  At scale this would be
-Delta/Iceberg MERGE or an actual DynamoDB writer; the upsert semantics
-are identical.
+Versioned state: ``commit_version`` fills a private ``_tmp-<uuid>``
+directory and renames it to ``v{N}``; a POSIX rename onto a non-empty
+directory fails, so a commit is atomic and exclusive.  The checkpoint
+table (the DynamoDB Global Table stand-in) counts its versions; the
+states in ``streaming/job.py`` name theirs by ``batch_id``, so a WAL
+replay of batch N finds its own ``v{N}`` (SIGMOD 2018's exactly-once
+foreachBatch rule).  At scale: Delta/Iceberg MERGE, or DynamoDB writes.
 """
 
 from __future__ import annotations
 
+import errno
 import os
+import shutil
+import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -50,38 +58,97 @@ def replicated_exactly_once(batch_df: DataFrame, out_dir: str, batch_id: int) ->
     )
 
 
-_PTR = "CURRENT"
+def _versions(table_dir: str) -> list[int]:
+    names = os.listdir(table_dir) if os.path.isdir(table_dir) else []
+    return sorted(int(n[1:]) for n in names if n[:1] == "v" and n[1:].isdigit())
 
 
-def _current_version_dir(table_dir: str) -> str | None:
-    ptr = os.path.join(table_dir, _PTR)
-    if not os.path.isfile(ptr):
-        return None
-    with open(ptr) as f:
-        v = f.read().strip()
-    vdir = os.path.join(table_dir, v)
-    return vdir if os.path.isdir(vdir) else None
+def version_path(table_dir: str, v: int) -> str:
+    return os.path.join(table_dir, f"v{v}")
 
 
-def _read_checkpoint_rows(table_dir: str) -> dict[str, str]:
-    """Current checkpoint as a dict — pyarrow, no Spark job (the table is
-    control-plane metadata: one row per stream)."""
-    vdir = _current_version_dir(table_dir)
-    if vdir is None:
-        return {}
+def latest_version(table_dir: str, below: int | None = None) -> int | None:
+    """Newest committed version, or the newest below ``below``.
+
+    A batch-keyed state reads ``below=batch_id``: the version its batch
+    folds into, the same one on a replay.  For ``below > 0`` a missing
+    version raises — the state before that batch was committed and is
+    now lost, and starting over from empty would silently drop it."""
+    vs = [v for v in _versions(table_dir) if below is None or v < below]
+    if vs:
+        return vs[-1]
+    if below:
+        raise FileNotFoundError(
+            f"no committed state version below {below} in {table_dir}: it "
+            "is lost; restore it, or start over with fresh state and WAL"
+        )
+    return None
+
+
+def _collect(table_dir: str) -> None:
+    """Garbage collection: keep the newest two committed versions."""
+    for v in _versions(table_dir)[:-2]:
+        shutil.rmtree(version_path(table_dir, v), ignore_errors=True)
+
+
+def commit_version(
+    table_dir: str, v: int, write: Callable[[str], None]
+) -> bool:
+    """``write(tmp)`` fills the empty directory ``tmp``, which is then
+    renamed to ``v{v}``.  Returns False, keeping what is there, when
+    ``v{v}`` is already committed.  The temp directory is always
+    removed (a killed process may leave one, which no reader lists)."""
+    os.makedirs(table_dir, exist_ok=True)
+    tmp = os.path.join(table_dir, f"_tmp-{uuid.uuid4().hex}")
+    os.mkdir(tmp)
+    path = version_path(table_dir, v)
+    try:
+        write(tmp)
+        try:
+            os.rename(tmp, path)
+        except OSError as e:
+            if e.errno in (errno.EEXIST, errno.ENOTEMPTY):
+                return False
+            raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    # GC frees a name only once two newer versions exist, so a slow
+    # writer that re-took a freed name is not the newest.
+    newest = latest_version(table_dir) == v
+    _collect(table_dir)
+    return newest
+
+
+def _read_checkpoint_rows(table_dir: str) -> tuple[int | None, dict[str, str]]:
+    """(version, rows) of the newest checkpoint — pyarrow, no Spark job."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    t = pq.read_table(os.path.join(vdir, "data.parquet"))
-    return dict(
-        zip(
-            t.column("streamName").to_pylist(),
-            t.column("lastReplicatedCommitTimestamp").to_pylist(),
+    while True:
+        v = latest_version(table_dir)
+        if v is None:
+            return None, {}
+        try:
+            # one open file: a collected and re-taken v{v} cannot swap
+            # the bytes under the reader
+            with pa.OSFile(os.path.join(version_path(table_dir, v), "data.parquet")) as f:
+                t = pq.read_table(f)
+        except FileNotFoundError:
+            if latest_version(table_dir) == v:
+                raise
+            continue  # a concurrent commit collected v after the listing
+        if latest_version(table_dir) != v:
+            continue  # v may have been collected and re-taken: read again
+        return v, dict(
+            zip(
+                t.column("streamName").to_pylist(),
+                t.column("lastReplicatedCommitTimestamp").to_pylist(),
+            )
         )
-    )
 
 
 def read_checkpoint_table(spark: SparkSession, table_dir: str) -> DataFrame:
-    rows = _read_checkpoint_rows(table_dir)
+    _, rows = _read_checkpoint_rows(table_dir)
     if not rows:
         return spark.createDataFrame(
             [], schema="streamName string, lastReplicatedCommitTimestamp string"
@@ -106,44 +173,28 @@ def upsert_checkpoint_rows(incoming: dict[str, str], table_dir: str) -> None:
     metadata bounded by the STREAM COUNT, so the merge+write is
     driver-side pyarrow and costs zero Spark jobs.
 
-    Durability: versioned directories + an atomically-replaced pointer
-    file (``os.replace`` is atomic on POSIX).  A crash at ANY step
-    leaves the previous version intact and readable — there is no window
-    where the table is missing (a naive delete-then-rename swap has
-    one).  Old versions beyond the last two are garbage-collected.
-    At scale this becomes Delta/Iceberg MERGE (same log-plus-snapshot
-    idea) or a DynamoDB conditional write.
+    Read the newest version, merge, ``commit_version`` the next one.  A
+    crash leaves the previous version readable, and two writers (regions
+    overlapping in a failover) lose no update: the loser of a race
+    retries, and the max merge is monotone.  Versions are counted, not
+    batch-named, because streams with separate WALs share the table.
     """
-    merged = _read_checkpoint_rows(table_dir)
-    for s, t in incoming.items():
-        if s not in merged or t > merged[s]:
-            merged[s] = t
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(table_dir, exist_ok=True)
-    cur = _current_version_dir(table_dir)
-    next_v = 0 if cur is None else int(os.path.basename(cur).lstrip("v")) + 1
-    vdir = os.path.join(table_dir, f"v{next_v}")
-    os.makedirs(vdir, exist_ok=True)
-    items = sorted(merged.items())
-    pq.write_table(
-        pa.table(
+    while True:
+        v, rows = _read_checkpoint_rows(table_dir)
+        rows.update({s: max(t, rows.get(s, t)) for s, t in incoming.items()})
+        rows = dict(sorted(rows.items()))
+        table = pa.table(
             {
-                "streamName": [s for s, _ in items],
-                "lastReplicatedCommitTimestamp": [t for _, t in items],
+                "streamName": list(rows),
+                "lastReplicatedCommitTimestamp": list(rows.values()),
             }
-        ),
-        os.path.join(vdir, "data.parquet"),
-    )
-    ptr_tmp = os.path.join(table_dir, _PTR + ".tmp")
-    with open(ptr_tmp, "w") as f:
-        f.write(f"v{next_v}")
-    os.replace(ptr_tmp, os.path.join(table_dir, _PTR))  # atomic commit
-    # GC: keep current + previous
-    import shutil
-
-    for name in os.listdir(table_dir):
-        if name.startswith("v") and name not in (f"v{next_v}", f"v{next_v - 1}"):
-            shutil.rmtree(os.path.join(table_dir, name), ignore_errors=True)
+        )
+        if commit_version(
+            table_dir,
+            0 if v is None else v + 1,
+            lambda tmp: pq.write_table(table, os.path.join(tmp, "data.parquet")),
+        ):
+            return

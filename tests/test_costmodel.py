@@ -201,6 +201,28 @@ def test_plan_from_catalog_caches_on_miss_then_reads_stats(
     assert stats2["smaller_side"] == "a"
 
 
+def test_cold_catalog_reads_each_sketch_once(
+    spark, orders, customer, tmp_path, monkeypatch
+):
+    """A catalog miss is found by checking the sketch path, not by a
+    failed read: cold planning builds each side's sketch and reads it
+    exactly once."""
+    cat = str(tmp_path / "catalog")
+    reads = []
+    orig = costmodel.read_key_sketch
+
+    def counting(spark_, catalog_dir, relation, *a, **kw):
+        reads.append(relation)
+        return orig(spark_, catalog_dir, relation, *a, **kw)
+
+    monkeypatch.setattr(costmodel, "read_key_sketch", counting)
+    costmodel.plan_equijoin_from_catalog(
+        orders, customer, "o_custkey", "c_custkey", cat,
+        "orders", "customer", broadcast_threshold_rows=100_000,
+    )
+    assert sorted(reads) == ["customer", "orders"]
+
+
 def test_grid_drops_null_keys(spark, orders):
     """NULL keys can never match an equi-join, so they must not count
     toward the 'exact side cardinality' — a NULL-heavy side would

@@ -198,16 +198,23 @@ def test_checkpoint_upsert_is_idempotent_and_monotone(spark, tmp_path):
     assert got == {"s1": "2024-01-01T00:00:09Z", "s2": "2024-01-01T00:00:01Z"}
 
 
-def test_checkpoint_crash_leaves_previous_version_readable(spark, tmp_path):
-    """Kill between data write and pointer commit: the table must still
-    read as the PREVIOUS state (no missing-table window)."""
-    import os
-
+def test_checkpoint_crash_leaves_previous_version_readable(
+    spark, tmp_path, monkeypatch
+):
+    """Kill between data write and the commit's rename: the table must
+    still read as the PREVIOUS state (no missing-table window)."""
     table = str(tmp_path / "cp")
 
     upsert_checkpoint_rows({"s1": "2024-01-01T00:00:05Z"}, table)
-    # simulate a crashed upsert: new version dir written, pointer NOT moved
-    os.makedirs(os.path.join(table, "v99"), exist_ok=True)
+    # a crashed upsert: the new version's data is written, the rename
+    # that commits it never happens
+    def crash(src, dst):
+        raise RuntimeError("injected crash: before rename")
+
+    monkeypatch.setattr(os, "rename", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        upsert_checkpoint_rows({"s1": "2024-01-01T00:00:06Z"}, table)
+    monkeypatch.undo()
     got = {
         r.streamName: r.lastReplicatedCommitTimestamp
         for r in read_checkpoint_table(spark, table).collect()
@@ -245,6 +252,66 @@ def test_malformed_payload_goes_to_dead_letter(spark, tmp_path, caplog):
     assert cp.first().lastReplicatedCommitTimestamp == "2024-01-01T00:00:00Z"
     # the dead-lettered record is not counted as processed
     assert _batch_summaries(caplog) == [(2, 1)]
+
+
+def test_exactly_once_replay_does_not_duplicate_dead_letters(
+    spark, tmp_path, monkeypatch
+):
+    """Under exactly_once the dead letters take the batch_id-keyed sink
+    too: a batch replayed after a crash rewrites its dead letters
+    instead of appending them a second time."""
+    from aws_kinesis_data_streams_replicator_spark.streaming import job as job_mod
+
+    out = str(tmp_path / "out")
+    stage = str(tmp_path / "stage")
+    env = spark.sql(
+        """
+        SELECT * FROM VALUES
+        ('arn:aws:kinesis:us-east-1:1:stream/kds-click/consumer/c:1', '1', '001',
+         TIMESTAMP '2024-01-01 00:00:00', encode('{"key":1,"commitTimestamp":"2024-01-01T00:00:00Z"}', 'UTF-8')),
+        ('arn:aws:kinesis:us-east-1:1:stream/kds-click/consumer/c:1', '2', '002',
+         TIMESTAMP '2024-01-01 00:00:01', encode('corrupted-not-json', 'UTF-8')),
+        ('arn:aws:kinesis:us-east-1:1:stream/kds-view/consumer/c:1', '3', '003',
+         TIMESTAMP '2024-01-01 00:00:02', encode('{"key":3}', 'UTF-8'))
+        AS t(eventSourceARN, partitionKey, sequenceNumber, approximateArrivalTimestamp, data)
+        """
+    )
+    stage_envelope_files(env, stage, n_files=1)
+    real_upsert = job_mod.upsert_checkpoint_rows
+    calls = {"n": 0}
+
+    def crash_once(incoming, table_dir):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise RuntimeError("injected crash: after the writes, before upsert")
+        real_upsert(incoming, table_dir)
+
+    monkeypatch.setattr(job_mod, "upsert_checkpoint_rows", crash_once)
+
+    def run():
+        q = run_replication_stream(
+            read_envelope_stream(spark, stage, max_batches_per_trigger=1),
+            _config_df(spark),
+            "us-east-1",
+            replicated_dir=os.path.join(out, "replicated"),
+            checkpoint_table_dir=os.path.join(out, "checkpoint_table"),
+            stream_checkpoint_dir=os.path.join(out, "wal"),
+            dead_letter_dir=os.path.join(out, "dead_letter"),
+            exactly_once=True,
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+            q.awaitTermination(30)
+
+    with pytest.raises(Exception, match="injected crash"):
+        run()
+    run()
+    assert calls["n"] == 2
+    dl = spark.read.parquet(os.path.join(out, "dead_letter"))
+    assert sorted(r.sequenceNumber for r in dl.collect()) == ["002", "003"]
+    assert spark.read.parquet(os.path.join(out, "replicated")).count() == 1
 
 
 def test_streaming_dedup_within_watermark(spark, sf_dir, tmp_path):

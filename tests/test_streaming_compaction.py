@@ -218,36 +218,33 @@ def test_legacy_two_column_state_fails_loudly(spark, tmp_path):
     stage = str(tmp_path / "stage")
     work = str(tmp_path / "work")
     wal = str(tmp_path / "wal")
-    # hand-write a legacy asof=0 state: two columns only, no 'path'
+
+    def run(schema):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage + "/*")
+        )
+        return streaming_compaction_maintenance(
+            stream, work, target_bytes=100, checkpoint_dir=wal
+        )
+
+    # epoch 0 under the legacy two-column inventory: file 1 stays pending
     spark.sql(
         "SELECT CAST(1 AS BIGINT) AS file_key, CAST(30 AS BIGINT) AS size_bytes"
-    ).write.parquet(f"{work}/state/asof=0/pending")
-    spark.sql("SELECT CAST(1 AS BIGINT) AS bins_emitted").write.parquet(
-        f"{work}/state/asof=0/meta"
-    )
+    ).coalesce(1).write.parquet(stage + "/b0")
+    q = run("file_key BIGINT, size_bytes BIGINT")
+    q.processAllAvailable()
+    q.stop()
+    q.awaitTermination(30)
+
+    # restart the same WAL with a 'path' column: epoch 1 reads the
+    # legacy pending state
     spark.sql(
         "SELECT CAST(2 AS BIGINT) AS file_key, CAST(40 AS BIGINT) AS size_bytes, "
         "'f2.parquet' AS path"
     ).coalesce(1).write.parquet(stage + "/b1")
-    # a checkpoint whose next batch_id is 1, so the job reads asof=0:
-    # easiest is a fresh WAL (batch 0) pointed at asof=-1... instead we
-    # pre-commit batch 0 by running once against an EMPTY glob dir is
-    # brittle — simplest deterministic route: call the guard path via a
-    # fresh stream whose first batch is 0 and plant the legacy state at
-    # asof=-1.
-    import shutil
-
-    shutil.move(f"{work}/state/asof=0", f"{work}/state/asof=-1")
-    stream = (
-        spark.readStream.schema(
-            "file_key BIGINT, size_bytes BIGINT, path STRING"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage + "/*")
-    )
-    q = streaming_compaction_maintenance(
-        stream, work, target_bytes=100, checkpoint_dir=wal
-    )
+    q = run("file_key BIGINT, size_bytes BIGINT, path STRING")
     with pytest.raises(StreamingQueryException, match="legacy layout"):
         q.processAllAvailable()
     q.stop()

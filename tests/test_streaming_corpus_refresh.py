@@ -17,6 +17,10 @@ from aws_kinesis_data_streams_replicator_spark.plans.queries import QUERIES
 from aws_kinesis_data_streams_replicator_spark.streaming.job import (
     streaming_corpus_refresh,
 )
+from aws_kinesis_data_streams_replicator_spark.streaming.sinks import (
+    latest_version,
+    version_path,
+)
 
 
 def _stage(spark, df, stage, name):
@@ -93,8 +97,10 @@ def test_wal_restart_and_redelivery(spark, tmp_path):
     first = docs.where(docs.doc_id % 10 < 8)
     _stage(spark, first, stage, "b0.parquet")
     _run(spark, stage, wal, work)
+    state = f"{work}/state"
     pub0 = sorted(
-        r.doc_id for r in spark.read.parquet(f"{work}/state/asof=0/pub").collect()
+        r.doc_id
+        for r in spark.read.parquet(f"{version_path(state, 0)}/pub").collect()
     )
     assert pub0, "epoch 0 published nothing"
     # epoch 0's changes are all 'added' (empty base)
@@ -114,5 +120,6 @@ def test_wal_restart_and_redelivery(spark, tmp_path):
     n_delta = docs.where(docs.doc_id % 10 >= 8).count()
     assert m.n_delta_docs == n_delta
     # state pruning: only the two most recent epochs remain
-    kept = sorted(os.listdir(f"{work}/state"))
-    assert kept == ["asof=0", "asof=1"]
+    assert latest_version(state) == 1
+    assert latest_version(state, below=1) == 0
+    assert len(os.listdir(state)) == 2

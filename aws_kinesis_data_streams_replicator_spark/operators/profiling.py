@@ -18,6 +18,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
+def _sql_string(name: str) -> str:
+    """``name`` as a SQL string literal: a quote or a backslash in a
+    rule name must not break — or inject into — a ``stack()``."""
+    return "'{}'".format(name.replace("\\", "\\\\").replace("'", "''"))
+
+
 def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """Per-column profile: rows, nulls, exact distincts, min/max as
     strings — one wide aggregation, then an unpivot to (column, metric)
@@ -65,14 +71,11 @@ def check_rules(df: DataFrame, rules: dict[str, str]) -> DataFrame:
     if not rules:
         raise ValueError("check_rules: rules must be non-empty")
     aggs = [F.count(F.lit(1)).cast("long").alias("n_rows")] + [
-        F.sum((~F.expr(sql_pred)).cast("long")).cast("long").alias(f"v__{name}")
-        for name, sql_pred in rules.items()
+        F.sum((~F.expr(sql_pred)).cast("long")).cast("long").alias(f"v__{i}")
+        for i, sql_pred in enumerate(rules.values())
     ]
     wide = df.agg(*aggs)
-    stack = ", ".join(
-        "'{}', v__{}".format(name.replace("'", "''"), name)
-        for name in rules
-    )
+    stack = ", ".join(f"{_sql_string(name)}, v__{i}" for i, name in enumerate(rules))
     out = wide.select(
         "n_rows",
         F.expr(f"stack({len(rules)}, {stack}) AS (rule_name, n_violations)"),
@@ -119,11 +122,8 @@ def check_referential_multi(
         for i in range(len(checks))
     ]
     wide = probed.agg(*aggs)
-    # rule names are caller literals, but escape anyway (r12 ADVICE):
-    # a quote in a name must not break — or inject into — the stack()
     stack = ", ".join(
-        "'{}', v__{}".format(name.replace("'", "''"), i)
-        for i, (_, _, _, name) in enumerate(checks)
+        f"{_sql_string(name)}, v__{i}" for i, (_, _, _, name) in enumerate(checks)
     )
     return wide.select(
         "n_rows",

@@ -567,8 +567,9 @@ def streaming_rollup_maintenance(
     Exactly-once under WAL replay WITHOUT idempotent-append tricks: the
     rollup is ``sinks.commit_version`` state NAMED BY batch_id, and the
     merge reads the newest version STRICTLY BELOW batch_id (never
-    "latest"), so a replayed batch N merges into the same v{N-1} and
-    finds v{N} already committed — no double counting.
+    "latest"), so a replayed batch N merges into the same v{N-1} — no
+    double counting — and one whose v{N} is already committed returns
+    before it builds anything.
 
     Scale notes: the merge is a Spark job over |keys| + |batch keys|
     rows keyed by ``key_col`` — map-side combined, no wide shuffle; the
@@ -587,6 +588,8 @@ def streaming_rollup_maintenance(
     ]
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if os.path.isdir(version_path(rollup_dir, batch_id)):
+            return  # a replay of a batch whose state is committed
         spark = batch_df.sparkSession
         partial = (
             batch_df.select(F.col(key_col).alias("key"), F.expr(cents_expr).alias("cents"))
@@ -953,8 +956,9 @@ def streaming_compaction_maintenance(
 
     * per-epoch state — the open tail's files plus a 1-row
       (bins_emitted) meta — is one ``sinks.commit_version`` version of
-      ``work_dir/state`` named by batch_id; a replayed batch N re-reads
-      the version below N and finds its own already committed;
+      ``work_dir/state`` named by batch_id; a replayed batch N whose
+      version is committed returns at once (its bins and files were
+      written before the commit), any other re-reads the version below N;
     * closed bins land at ``work_dir/bins/epoch=<batch_id>`` via full
       directory overwrite, so the replay rewrites byte-identical
       output instead of duplicating it;
@@ -973,6 +977,8 @@ def streaming_compaction_maintenance(
     state = f"{work_dir}/state"
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
+        if os.path.isdir(version_path(state, batch_id)):
+            return  # a replay of a committed batch; its bins/files exist
         spark = batch_df.sparkSession
         pending = None
         bins_emitted = 0
@@ -1058,7 +1064,9 @@ def streaming_corpus_refresh(
     * per-epoch state — the doc inventory, the band index, the cluster
       labels, and the published set — is one ``sinks.commit_version``
       version of ``work_dir/state`` named by batch_id; a replayed batch
-      N re-reads the version below N and finds its own already committed;
+      N whose version is committed returns at once (its changes and
+      manifest were written before the commit), any other re-reads the
+      version below N;
     * the epoch's publication changes land at
       ``work_dir/changes/epoch=<batch_id>`` (columns doc_id / change /
       cluster_id — after-label for added, before-label for retracted)
@@ -1095,6 +1103,8 @@ def streaming_corpus_refresh(
     }
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
+        if os.path.isdir(version_path(state, batch_id)):
+            return  # a replay of a committed batch; its changes/manifest exist
         spark = batch_df.sparkSession
         v = latest_version(state, below=batch_id)
         prev_docs, prev_bands, prev_cc, prev_pub = (

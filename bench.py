@@ -447,12 +447,20 @@ def main() -> None:
         return json.dumps(compact)
 
     line = _compact_line(names)
+    dropped_carry = []
     while len(line) > 1900 and names:
         droppable = [k for k in reversed(names) if k not in carry]
         if not droppable:
             droppable = [names[-1]]  # overflow even on carryover: trim tail
+            dropped_carry.append(names[-1])
         names.remove(droppable[0])
         line = _compact_line(names)
+    if dropped_carry:
+        print(
+            "bench: compact line overflows even on the previous round's keys; "
+            f"dropped carryover keys: {', '.join(dropped_carry)}",
+            file=sys.stderr,
+        )
     print(line)
     if not floor_ok:
         print(

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from aws_kinesis_data_streams_replicator_spark.operators.profiling import (
     check_referential,
+    check_referential_multi,
     check_rules,
     profile_table,
 )
@@ -51,3 +52,18 @@ def test_referential_orphans_counted(spark):
     dim = spark.sql("SELECT * FROM VALUES (1L), (2L) AS d(k)")
     out = check_referential(_df(spark), "id", dim, "k", "fk").collect()[0]
     assert (out.n_rows, out.n_violations, out.passed) == (4, 2, 0)  # two id=3 rows
+
+
+def test_rule_names_are_sql_literals_not_identifiers(spark):
+    """A quote, a space or a trailing backslash in a rule name comes back
+    unchanged from both stack() builders."""
+    names = ["it's", "a b", "ends\\"]
+    rules = check_rules(_df(spark), {n: "amount > 0" for n in names})
+    assert sorted((r.rule_name, r.n_violations) for r in rules.collect()) == sorted(
+        (n, 2) for n in names
+    )
+    dim = spark.sql("SELECT * FROM VALUES (1L), (2L) AS d(k)")
+    multi = check_referential_multi(_df(spark), [("id", dim, "k", n) for n in names])
+    assert sorted((r.rule_name, r.n_violations) for r in multi.collect()) == sorted(
+        (n, 2) for n in names
+    )

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, functions as F
 
 def _sql_string(name: str) -> str:
     """``name`` as a SQL string literal: a quote or a backslash in a
-    rule name must not break — or inject into — a ``stack()``."""
+    rule or column name must not break — or inject into — a ``stack()``."""
     return "'{}'".format(name.replace("\\", "\\\\").replace("'", "''"))
 
 
@@ -39,22 +39,25 @@ def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     monitoring.
     """
     cols = columns or df.columns
+    # index aliases: a column name is never spliced into SQL as an
+    # identifier, only as an escaped string literal in the stack()
     aggs = [F.count(F.lit(1)).cast("long").alias("n_rows")]
-    for c in cols:
+    for i, c in enumerate(cols):
         aggs += [
-            F.sum(F.col(c).isNull().cast("long")).cast("long").alias(f"{c}__nulls"),
+            F.sum(F.col(c).isNull().cast("long")).cast("long").alias(f"c{i}__nulls"),
             # min/max in the column's NATIVE ordering, cast to string
             # after — casting first would rank '9' above '14999'
-            F.min(F.col(c)).cast("string").alias(f"{c}__min"),
-            F.max(F.col(c)).cast("string").alias(f"{c}__max"),
+            F.min(F.col(c)).cast("string").alias(f"c{i}__min"),
+            F.max(F.col(c)).cast("string").alias(f"c{i}__max"),
         ]
     d_aggs = [
-        F.count_distinct(F.col(c)).cast("long").alias(f"{c}__distinct")
-        for c in cols
+        F.count_distinct(F.col(c)).cast("long").alias(f"c{i}__distinct")
+        for i, c in enumerate(cols)
     ]
     wide = df.agg(*aggs).crossJoin(F.broadcast(df.agg(*d_aggs)))
     stack = ", ".join(
-        f"'{c}', {c}__nulls, {c}__distinct, {c}__min, {c}__max" for c in cols
+        f"{_sql_string(c)}, c{i}__nulls, c{i}__distinct, c{i}__min, c{i}__max"
+        for i, c in enumerate(cols)
     )
     return wide.select(
         "n_rows",

@@ -25,10 +25,10 @@ batches (the reference NPEs on those).
 Gate semantics (Handler.java:139-167): no config row → drop + warn;
 multiple config rows → drop (error); case-insensitive region compare.
 The config is control-plane metadata (one row per stream), so
-``active_streams`` collects it on the driver and applies these rules in
-Python, the way the reference applies them to its one DynamoDB Query
-result (Handler.java:65).  The gate is then a plain ``isin`` filter on
-the data side: no join, no config-side job.
+``active_streams`` collects it on the driver and ``streams_active_in``
+applies these rules in Python, the way the reference applies them to
+its one DynamoDB Query result (Handler.java:65).  The gate is then a
+plain ``isin`` filter on the data side: no join, no config-side job.
 
 Checkpoint: the reference putItems per record, so the surviving value is
 the LAST in sequence order per stream.  Commit timestamps are monotone
@@ -54,6 +54,10 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.arn import stream_name_from_arn
 from ..functions.json_payload import decode_payload, extract_commit_timestamp
 
+CONFIG_COLUMNS = ("streamName", "activeRegion")
+# op 7: the columns that land in the target stream
+REPLICATED_COLUMNS = ("streamName", "partitionKey", "sequenceNumber", "data", "payload")
+
 
 def with_decoded(envelope: DataFrame) -> DataFrame:
     """Ops 2-4: stream name, payload string, commitTimestamp columns."""
@@ -66,7 +70,13 @@ def with_decoded(envelope: DataFrame) -> DataFrame:
 
 
 def active_streams(config: DataFrame, current_region: str) -> list[str]:
-    """Op 5 rule: the streams replicated from ``current_region``.
+    """Op 5 rule applied to the config: see ``streams_active_in``."""
+    return streams_active_in(config.select(*CONFIG_COLUMNS).collect(), current_region)
+
+
+def streams_active_in(rows: list, current_region: str) -> list[str]:
+    """Op 5 rule: the streams replicated from ``current_region``, given
+    the collected ``(streamName, activeRegion)`` config rows.
 
     A stream needs EXACTLY one config row (none → dropped with a warning,
     more than one → dropped with an error; Handler.java:152-159), and
@@ -74,16 +84,12 @@ def active_streams(config: DataFrame, current_region: str) -> list[str]:
     (Handler.java:160-161, equalsIgnoreCase).  A NULL stream name or
     region never matches.
     """
-    rows = config.select("streamName", "activeRegion").collect()
-    n_rows = Counter(r["streamName"] for r in rows)
+    n_rows = Counter(r[0] for r in rows)
     region = current_region.lower()
     return sorted(
-        r["streamName"]
-        for r in rows
-        if r["streamName"] is not None
-        and n_rows[r["streamName"]] == 1
-        and r["activeRegion"] is not None
-        and r["activeRegion"].lower() == region
+        s
+        for s, r in rows
+        if s is not None and n_rows[s] == 1 and r is not None and r.lower() == region
     )
 
 
@@ -99,9 +105,7 @@ def gate_active_region(
 def replicated_records(gated: DataFrame) -> DataFrame:
     """Op 7: what lands in the target stream — same stream name, same
     partition key, byte-faithful payload (Handler.java:79-84)."""
-    return gated.select(
-        "streamName", "partitionKey", "sequenceNumber", "data", "payload"
-    )
+    return gated.select(*REPLICATED_COLUMNS)
 
 
 def checkpoint(gated: DataFrame) -> DataFrame:

@@ -16,6 +16,14 @@ Config note: the config is re-read at the start of every micro-batch,
 exactly matching the reference's one DynamoDB Query per batch
 (Handler.java:65), so a flipped ``activeRegion`` takes effect on the
 next batch without restarting the query.
+
+Driver glue: each ``F.*`` call, string column name or Python list
+handed to the JVM is a Py4J round trip, and rebuilding every expression
+per batch cost about 400 of them per trigger.  So the config projection
+is built once per query (each batch collects a fresh alias of it, which
+Spark plans and runs again), and the gate, the ``Observation``
+aggregates and the output projection are Column objects built once per
+distinct active-stream set; a batch then issues about 50 commands.
 """
 
 from __future__ import annotations
@@ -23,8 +31,9 @@ from __future__ import annotations
 import logging
 import os
 import time
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import replication
@@ -39,6 +48,45 @@ from .sinks import (  # noqa: F401
 )
 
 log = logging.getLogger("akr.replication")
+
+
+class _StreamSetColumns(NamedTuple):
+    """The Column objects a micro-batch of one active-stream set needs."""
+
+    streams: tuple[str, ...]
+    keep: Column  # active stream and, with dead letters, well-formed payload
+    dead: Column  # active stream, malformed payload (dead-letter mode only)
+    aggs: list[Column]  # n_in, then n_i, arrival_i, cts_i per stream i
+    projection: list[Column]  # op 7's columns
+
+
+def _stream_set_columns(
+    streams: tuple[str, ...], dead_letters: bool
+) -> _StreamSetColumns:
+    stream = F.col("streamName")
+    cts = F.col("commitTimestamp")
+    arrival = F.col("approximateArrivalTimestamp").cast("double")
+    active = stream.isin(list(streams))
+    # Malformed payloads: the reference aborts the batch and retries
+    # forever (Handler.java:90-93); a poison message would wedge the
+    # stream, so in dead-letter mode the engine dead-letters it instead
+    # (documented deviation).
+    well_formed = cts.isNotNull() if dead_letters else F.lit(True)
+    aggs = [F.count(F.lit(1)).alias("n_in")]
+    for i, s in enumerate(streams):
+        mine = (stream == s) & well_formed
+        aggs += [
+            F.count(F.when(mine, 1)).alias(f"n_{i}"),
+            F.max(F.when(mine, arrival)).alias(f"arrival_{i}"),
+            F.max(F.when(mine, cts)).alias(f"cts_{i}"),
+        ]
+    return _StreamSetColumns(
+        streams,
+        active & well_formed,
+        active & cts.isNull(),
+        aggs,
+        [F.col(c) for c in replication.REPLICATED_COLUMNS],
+    )
 
 
 def run_replication_stream(
@@ -59,67 +107,69 @@ def run_replication_stream(
 
     Per-trigger cost (the hot path at any scale): ONE Spark job, the
     replication write.  Each micro-batch resolves the active streams on
-    the driver (``replication.active_streams``: a ``VALUES`` config
-    collects without a job; a file-backed one costs one scan) and gates
-    with a plain filter.  Everything else the batch needs rides that
-    write as ``Observation`` aggregates over the un-gated batch: the
-    batch size, and per active stream the replicated count, the last
-    arrival and the ``max(commitTimestamp)`` checkpoint mark.
+    the driver (``replication.streams_active_in`` over the collected
+    config: a ``VALUES`` config collects without a job; a file-backed
+    one costs one scan) and gates with a plain filter.  Everything else
+    the batch needs rides that write as ``Observation`` aggregates over
+    the un-gated batch: the batch size, and per active stream the
+    replicated count, the last arrival and the ``max(commitTimestamp)``
+    checkpoint mark.
+
+    What is built when:
+
+    * once per query: the ``(streamName, activeRegion)`` projection of
+      ``config``;
+    * once per distinct active-stream set (rebuilt only when a config
+      change alters the set): the gate, the dead-letter filter, the
+      ``Observation`` aggregates and the output projection, as Column
+      objects.  A Column is an unresolved JVM expression, so one object
+      serves every batch, while building one costs Py4J round trips;
+    * every batch: the config collect, a new ``Observation``, the
+      writes and the checkpoint upsert.  The collect goes through a new
+      alias of the projection (one JVM call), so Spark plans and runs it
+      again and the config is read once per batch as in Handler.java:65;
+      collecting the same Dataset twice would reuse its executed plan,
+      and a config plan with a shuffle would return the first batch's
+      rows.
 
     Each batch logs the reference's summary line on ``akr.replication``
     (``Total Batch Size: N, Successfully Processed: M``, README.md:136-137;
     N before the gate, M written to the replication sink) and, per
     replicated stream, ``ThroughPut`` and ``ReplicationLagSeconds``
     (Handler.java:94-122)."""
+    config_rows = config.select(*replication.CONFIG_COLUMNS)
+    two_writes = dead_letter_dir is not None
+    cols: _StreamSetColumns | None = None
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal cols
+
         def write(df: DataFrame, out_dir: str) -> None:
             if exactly_once:
                 replicated_exactly_once(df, out_dir, batch_id)
             else:
                 append_replicated(df, out_dir)
 
-        streams = replication.active_streams(config, current_region)
-        two_writes = dead_letter_dir is not None
+        streams = tuple(
+            replication.streams_active_in(
+                config_rows.alias("config").collect(), current_region
+            )
+        )
+        if cols is None or cols.streams != streams:
+            cols = _stream_set_columns(streams, two_writes)
         if two_writes:
             # dead-letter mode consumes the batch twice (bad + good
             # writes) — the persist still pays for itself there
             batch_df = batch_df.persist()
         try:
-            active = F.col("streamName").isin(streams)
-            well_formed = F.lit(True)
             if two_writes:
-                # Malformed payloads: the reference aborts the batch and
-                # retries forever (Handler.java:90-93); a poison message
-                # would wedge the stream, so the engine dead-letters it
-                # instead (documented deviation).  Dead letters go through
-                # the same sink as the good rows, so a replay under
-                # exactly_once rewrites them instead of duplicating them.
-                write(
-                    batch_df.where(active & F.col("commitTimestamp").isNull()),
-                    dead_letter_dir,
-                )
-                well_formed = F.col("commitTimestamp").isNotNull()
-            aggs = [F.count(F.lit(1)).alias("n_in")]
-            for i, s in enumerate(streams):
-                mine = (F.col("streamName") == s) & well_formed
-                aggs += [
-                    F.count(F.when(mine, 1)).alias(f"n_{i}"),
-                    F.max(
-                        F.when(
-                            mine,
-                            F.col("approximateArrivalTimestamp").cast("double"),
-                        )
-                    ).alias(f"arrival_{i}"),
-                    F.max(F.when(mine, F.col("commitTimestamp"))).alias(
-                        f"cts_{i}"
-                    ),
-                ]
+                # Dead letters go through the same sink as the good rows,
+                # so a replay under exactly_once rewrites them instead of
+                # duplicating them.
+                write(batch_df.where(cols.dead), dead_letter_dir)
             obs = Observation()
-            out = replication.replicated_records(
-                batch_df.observe(obs, *aggs).where(active & well_formed)
-            )
-            write(out, replicated_dir)
+            out = batch_df.observe(obs, *cols.aggs).where(cols.keep)
+            write(out.select(*cols.projection), replicated_dir)
             got = obs.get  # no wait: the write action above finished
             upsert_checkpoint_rows(
                 {
@@ -143,7 +193,7 @@ def run_replication_stream(
     )
 
 
-def _log_batch_metrics(got: dict, streams: list[str]) -> None:
+def _log_batch_metrics(got: dict, streams: tuple[str, ...]) -> None:
     """The reference's per-batch log line and per-stream metrics, from
     the values observed on the replication write (no Spark job)."""
     now = time.time()

@@ -34,14 +34,18 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _by_sequence(batch_df: DataFrame) -> DataFrame:
+    """Op 6: sort within partitions on sequenceNumber.  ``df[name]`` is
+    one direct JVM call; a string key or ``F.col`` goes through Py4J
+    reflection over Spark's ``functions`` class, about a dozen round
+    trips, on every micro-batch."""
+    return batch_df.sortWithinPartitions(batch_df["sequenceNumber"])
+
+
 def append_replicated(batch_df: DataFrame, out_dir: str) -> None:
     """Replication sink: per-shard order preserved by sorting within
     partitions on sequenceNumber before the write (op 6)."""
-    (
-        batch_df.sortWithinPartitions("sequenceNumber")
-        .write.mode("append")
-        .parquet(out_dir)
-    )
+    _by_sequence(batch_df).write.mode("append").parquet(out_dir)
 
 
 def replicated_exactly_once(batch_df: DataFrame, out_dir: str, batch_id: int) -> None:
@@ -51,10 +55,8 @@ def replicated_exactly_once(batch_df: DataFrame, out_dir: str, batch_id: int) ->
     (The reference's Kinesis target can't do this — PutRecord is
     append-only, hence its documented at-least-once; a file/table target
     can, and this is the standard foreachBatch idempotency pattern.)"""
-    (
-        batch_df.sortWithinPartitions("sequenceNumber")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, f"batch_id={batch_id}"))
+    _by_sequence(batch_df).write.mode("overwrite").parquet(
+        os.path.join(out_dir, f"batch_id={batch_id}")
     )
 
 
@@ -178,13 +180,17 @@ def upsert_checkpoint_rows(incoming: dict[str, str], table_dir: str) -> None:
     overlapping in a failover) lose no update: the loser of a race
     retries, and the max merge is monotone.  Versions are counted, not
     batch-named, because streams with separate WALs share the table.
+    A merge that moves no mark (a batch with no gated rows, a replay of
+    an older batch) commits nothing: later versions only grow.
     """
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     while True:
-        v, rows = _read_checkpoint_rows(table_dir)
-        rows.update({s: max(t, rows.get(s, t)) for s, t in incoming.items()})
+        v, old = _read_checkpoint_rows(table_dir)
+        rows = {**old, **{s: max(t, old.get(s, t)) for s, t in incoming.items()}}
+        if rows == old:
+            return
         rows = dict(sorted(rows.items()))
         table = pa.table(
             {

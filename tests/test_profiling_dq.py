@@ -67,3 +67,17 @@ def test_rule_names_are_sql_literals_not_identifiers(spark):
     assert sorted((r.rule_name, r.n_violations) for r in multi.collect()) == sorted(
         (n, 2) for n in names
     )
+
+
+def test_column_names_are_sql_literals_not_identifiers(spark):
+    """A space, a quote or a trailing backslash in a column name comes
+    back unchanged from profile_table's stack()."""
+    names = ["a b", "it's", "ends\\"]
+    df = spark.sql(
+        "SELECT * FROM VALUES (1L, 'x', 2.0D), (3L, NULL, 2.0D) AS t(p, q, r)"
+    ).toDF(*names)
+    out = {r.column_name: r for r in profile_table(df).collect()}
+    assert sorted(out) == sorted(names)
+    assert (out["a b"].n_rows, out["a b"].min_s, out["a b"].max_s) == (2, "1", "3")
+    assert (out["it's"].n_nulls, out["it's"].n_distinct) == (1, 1)
+    assert (out["ends\\"].n_nulls, out["ends\\"].n_distinct) == (0, 1)

@@ -2,8 +2,9 @@
 (README.md:~51-56 runbook: flip ``activeRegion`` in the config table and
 the other region takes over replication).
 
-Modeled as: drain phase 1 under config A, update the config, resume the
-SAME stream (same WAL) under config B.  Records arriving after the flip
+Modeled twice: drain phase 1 under config A, update the config, resume
+the SAME stream (same WAL) under config B; and flip the config between
+two triggers of one running query.  Records arriving after the flip
 are gated by the new config; nothing already replicated is lost or
 duplicated.  (The job re-reads the config at the start of every
 micro-batch, matching the reference's one DynamoDB Query per batch.)
@@ -12,9 +13,14 @@ micro-batch, matching the reference's one DynamoDB Query per batch.)
 from __future__ import annotations
 
 import glob
+import json
 import os
+import sys
 
+import pytest
+from pyspark import cloudpickle
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import DataSource, DataSourceReader
 
 from aws_kinesis_data_streams_replicator_spark.operators import replication
 from aws_kinesis_data_streams_replicator_spark.sources.envelope import envelope_from_events
@@ -27,6 +33,31 @@ from aws_kinesis_data_streams_replicator_spark.streaming.source import (
     read_envelope_stream,
     stage_envelope_files,
 )
+
+
+class _ConfigTable(DataSource):
+    """DynamoDB stand-in: every execution of a plan over it reads the
+    JSON file named by ``path`` again, as the reference queries its
+    config table once per invocation (Handler.java:65)."""
+
+    @classmethod
+    def name(cls):
+        return "akr_test_config_table"
+
+    def schema(self):
+        return "streamName string, activeRegion string"
+
+    def reader(self, schema):
+        return _ConfigReader(self.options["path"])
+
+
+class _ConfigReader(DataSourceReader):
+    def __init__(self, path):
+        self.path = path
+
+    def read(self, partition):
+        with open(self.path) as f:
+            yield from (tuple(row) for row in json.load(f))
 
 
 def _cfg(spark, rows):
@@ -194,3 +225,83 @@ def test_midbatch_crash_between_append_and_checkpoint(
     assert cp_final == expected_cp
     for s, t in cp_mid.items():
         assert cp_final[s] >= t
+
+
+@pytest.mark.parametrize(
+    "shape",
+    [
+        pytest.param(lambda c: c, id="scan"),
+        # an exchange in the config plan: a re-run must not reuse the
+        # first batch's shuffle output
+        pytest.param(lambda c: c.dropDuplicates(), id="shuffle"),
+    ],
+)
+def test_config_flip_mid_run(spark, sf_dir, tmp_path, shape):
+    """Flip ``activeRegion`` between two triggers of ONE running query:
+    the next micro-batch is gated by the new config, with no restart.
+    The job builds its config projection once and collects it per batch,
+    so this holds only if each collect plans and reads the config again:
+    collecting one Dataset twice would reuse its executed plan, and with
+    a shuffle in it, the first batch's rows."""
+    env = envelope_from_events(load_table(spark, sf_dir, "events"))
+    first, second = env.limit(400), env.subtract(env.limit(400))
+    (f0,) = stage_envelope_files(first, str(tmp_path / "s0"), n_files=1)
+    (f1,) = stage_envelope_files(second, str(tmp_path / "s1"), n_files=1)
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    os.makedirs(src)
+    path = str(tmp_path / "config.json")
+    rows_a = [("kds-click", "us-east-1"), ("kds-view", "eu-west-1")]
+    rows_b = [("kds-click", "eu-west-1"), ("kds-view", "US-EAST-1")]
+    with open(path, "w") as f:
+        json.dump(rows_a, f)
+    # the Python worker cannot import this test module: ship it by value
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    try:
+        spark.dataSource.register(_ConfigTable)
+        config = shape(
+            spark.read.format(_ConfigTable.name()).option("path", path).load()
+        )
+        os.rename(f0, os.path.join(src, "batch_00000.parquet"))
+        q = run_replication_stream(
+            read_envelope_stream(spark, src),
+            config,
+            "us-east-1",
+            replicated_dir=os.path.join(out, "repl"),
+            checkpoint_table_dir=os.path.join(out, "cp"),
+            stream_checkpoint_dir=os.path.join(out, "wal"),
+        )
+        try:
+            q.processAllAvailable()
+            with open(path, "w") as f:
+                json.dump(rows_b, f)  # FAILOVER, while the query runs
+            os.rename(f1, os.path.join(src, "batch_00001.parquet"))
+            q.processAllAvailable()
+            assert q.isActive
+            triggers = [p for p in q.recentProgress if p.numInputRows]
+        finally:
+            q.stop()
+            q.awaitTermination(30)
+    finally:
+        cloudpickle.unregister_pickle_by_value(sys.modules[__name__])
+
+    assert len(triggers) == 2
+    assert len({p.runId for p in triggers}) == 1
+
+    def pairs(df):
+        return {(r.streamName, r.sequenceNumber) for r in df.collect()}
+
+    def gated(batch, rows):
+        return replication.gate_active_region(
+            replication.with_decoded(batch), _cfg(spark, rows), "us-east-1"
+        ).select("streamName", "sequenceNumber")
+
+    got = pairs(spark.read.parquet(os.path.join(out, "repl")))
+    want_a, want_b = pairs(gated(first, rows_a)), pairs(gated(second, rows_b))
+    assert {s for s, _ in want_a} == {"kds-click"}
+    assert {s for s, _ in want_b} == {"kds-view"}
+    assert got == want_a | want_b
+    cp = {
+        r.streamName
+        for r in read_checkpoint_table(spark, os.path.join(out, "cp")).collect()
+    }
+    assert cp == {"kds-click", "kds-view"}

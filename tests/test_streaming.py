@@ -7,6 +7,7 @@ from __future__ import annotations
 import logging
 import os
 import re
+import threading
 
 import pytest
 
@@ -16,6 +17,7 @@ from aws_kinesis_data_streams_replicator_spark.operators import replication
 from aws_kinesis_data_streams_replicator_spark.sources.envelope import envelope_from_events
 from aws_kinesis_data_streams_replicator_spark.sources.tables import load_table
 from aws_kinesis_data_streams_replicator_spark.streaming.sinks import (
+    latest_version,
     upsert_checkpoint_rows,
 )
 from aws_kinesis_data_streams_replicator_spark.streaming.source import (
@@ -149,6 +151,96 @@ def test_one_spark_job_per_trigger(spark, envelope, tmp_path):
     assert len(jobs) == len(triggers)
 
 
+def test_trigger_py4j_budget(spark, envelope, tmp_path, monkeypatch):
+    """The foreachBatch glue builds its gate, Observation aggregates and
+    output projection once per active-stream set: every data trigger
+    after the first issues at most 60 Python→JVM commands on the thread
+    that runs it (about 400 when each batch rebuilt them).  py4j's
+    ``m`` (release) commands are left out: they free objects dropped
+    earlier, in bursts that follow Python's garbage collector."""
+    from aws_kinesis_data_streams_replicator_spark.streaming import job as job_mod
+
+    out = str(tmp_path / "out")
+    stage = str(tmp_path / "stage")
+    stage_envelope_files(envelope, stage, n_files=4)
+    client = spark.sparkContext._gateway._gateway_client
+    real_send, real_upsert = client.send_command, job_mod.upsert_checkpoint_rows
+    sent: list[tuple[int, str]] = []
+    ends: list[tuple[int, int]] = []  # (thread, commands sent) per batch end
+
+    def send_command(command, *args, **kwargs):
+        sent.append((threading.get_ident(), command))
+        return real_send(command, *args, **kwargs)
+
+    def upsert(incoming, table_dir):
+        ends.append((threading.get_ident(), len(sent)))
+        return real_upsert(incoming, table_dir)
+
+    monkeypatch.setattr(client, "send_command", send_command)
+    monkeypatch.setattr(job_mod, "upsert_checkpoint_rows", upsert)
+    q = run_replication_stream(
+        read_envelope_stream(spark, stage, max_batches_per_trigger=1),
+        _config_df(spark),
+        "us-east-1",
+        replicated_dir=os.path.join(out, "replicated"),
+        checkpoint_table_dir=os.path.join(out, "checkpoint_table"),
+        stream_checkpoint_dir=os.path.join(out, "wal"),
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        q.awaitTermination(30)
+        monkeypatch.undo()
+    per_trigger = [
+        sum(1 for t, c in sent[a:b] if t == thread and not c.startswith("m\n"))
+        for (_, a), (thread, b) in zip(ends, ends[1:])
+    ]
+    assert len(per_trigger) == 3
+    assert max(per_trigger) <= 60, per_trigger
+
+
+def test_batch_without_gated_rows_commits_no_checkpoint_version(
+    spark, envelope, tmp_path, caplog
+):
+    """A micro-batch with no row of an active stream moves no
+    checkpoint mark, so it commits no new checkpoint version."""
+    caplog.set_level(logging.INFO, logger="akr.replication")
+    out = str(tmp_path / "out")
+    src = str(tmp_path / "src")
+    decoded = replication.with_decoded(envelope)
+    inactive = decoded.where(~F.col("streamName").isin("kds-click", "kds-view"))
+    assert inactive.count() > 0
+    (first,) = stage_envelope_files(envelope.limit(300), str(tmp_path / "s0"), 1)
+    (second,) = stage_envelope_files(
+        inactive.select(*envelope.columns), str(tmp_path / "s1"), 1
+    )
+    os.makedirs(src)
+    os.rename(first, os.path.join(src, "batch_00000.parquet"))
+    table = os.path.join(out, "checkpoint_table")
+    q = run_replication_stream(
+        read_envelope_stream(spark, src, max_batches_per_trigger=1),
+        _config_df(spark),
+        "us-east-1",
+        replicated_dir=os.path.join(out, "replicated"),
+        checkpoint_table_dir=table,
+        stream_checkpoint_dir=os.path.join(out, "wal"),
+    )
+    try:
+        q.processAllAvailable()
+        before = latest_version(table)
+        marks = read_checkpoint_table(spark, table).collect()
+        os.rename(second, os.path.join(src, "batch_00001.parquet"))
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        q.awaitTermination(30)
+    assert before == 0
+    assert _batch_summaries(caplog)[-1] == (inactive.count(), 0)
+    assert latest_version(table) == before
+    assert read_checkpoint_table(spark, table).collect() == marks
+
+
 def test_restart_resumes_without_loss_or_dup(spark, envelope, tmp_path):
     """Kill-and-restart from checkpointLocation (op 9): prefix processed
     before the stop is not reprocessed; everything arrives exactly once
@@ -189,8 +281,10 @@ def test_checkpoint_upsert_is_idempotent_and_monotone(spark, tmp_path):
     upsert_checkpoint_rows(
         {"s1": "2024-01-01T00:00:09Z", "s2": "2024-01-01T00:00:01Z"}, table
     )
-    # replay of an OLD batch (Lambda-style retry) must not move s1 backwards
+    # replay of an OLD batch (Lambda-style retry) must not move s1
+    # backwards, and commits no version
     upsert_checkpoint_rows({"s1": "2024-01-01T00:00:05Z"}, table)
+    assert latest_version(table) == 1
     got = {
         r.streamName: r.lastReplicatedCommitTimestamp
         for r in read_checkpoint_table(spark, table).collect()
